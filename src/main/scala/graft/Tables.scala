@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * asserts PushedFilters/ReadSchema on a representative plan).
   *
   * Session invariant: `spark.sql.legacy.parquet.nanosAsLong=true` must be
-  * set at SparkSession build time (Verify/Bench/TestSpark all do); the
+  * set at SparkSession build time ([[Session.builder]] does); the
   * `events` loader also sets it defensively before the first scan.
   */
 object Tables {

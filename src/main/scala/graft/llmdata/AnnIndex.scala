@@ -787,10 +787,8 @@ object IndexMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: IndexMain <corpusDir> <indexDir>")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-ann-index-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     val empty =
       try {

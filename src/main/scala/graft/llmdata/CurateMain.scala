@@ -29,9 +29,8 @@ object CurateMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: CurateMain <corpusDir> <outDir>")
     val (corpusDir, outDir) = (args(0), args(1))
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-curate")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     val keptCount =
       try run(spark, corpusDir, outDir)

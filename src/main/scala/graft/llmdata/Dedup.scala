@@ -1125,8 +1125,6 @@ object Dedup {
     * corpus that outgrew the 32 KiB default). */
   def corpusBloom(spark: SparkSession, dir: String,
                   numBits: Int = 0, numHashes: Int = 0): Array[Byte] = {
-    require(spark.catalog.functionExists("bloom_sketch"),
-      "corpusBloom needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     val docs = Tables.documents(spark, dir)
       .select(md5(col("text").cast("binary")).as("h"))
     val (bits, k) =
@@ -1411,7 +1409,7 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("test_id")).orderBy(col("cos_sim").desc, col("train_id"))
     test.crossJoin(train)
-      .withColumn("cos_sim", Similarity.cosineBest(spark, col("te"), col("tr")))
+      .withColumn("cos_sim", Similarity.cosineBest(col("te"), col("tr")))
       .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1)
@@ -1465,7 +1463,7 @@ object Dedup {
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
     a.join(b, col("id_a") < col("id_b"))
-      .select(Similarity.cosineBest(spark, col("va"), col("vb")).as("sim"))
+      .select(Similarity.cosineBest(col("va"), col("vb")).as("sim"))
       // Spark's floor-to-long maps NaN to 0 (silently corrupting the
       // [0, binWidth) bin) where DuckDB's cast errors — drop zero-norm
       // NaN sims symmetrically on both sides instead
@@ -2400,8 +2398,6 @@ object Dedup {
   def bloomDelta(spark: SparkSession, dir: String,
                  shardMod: Int = 5, shardRem: Int = 4,
                  numBits: Int = 0, numHashes: Int = 0): DataFrame = {
-    require(spark.catalog.functionExists("bloom_sketch"),
-      "bloomDelta needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
     val isIncoming = (c: Column) => c % shardMod === shardRem

@@ -2507,10 +2507,8 @@ object IngestMain {
     // fail the bad id before a session spins up (ADVICE r12: -1's
     // corpus batch id collides with bootstrap's 0)
     require(shardId >= 0L, s"shardId must be >= 0, got $shardId")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-ingest")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     val empty =
       try {
@@ -2541,10 +2539,8 @@ object IngestMain {
 object RebuildMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RebuildMain <workDir> <snapDir>")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-ingest-rebuild")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     try {
       val dirs = Ingest.dirsUnder(args(0))
@@ -2580,10 +2576,8 @@ object IngestStreamMain {
     val shardMod = if (args.length > 4) args(4).toInt else 10
     val shardRem = if (args.length > 5) args(5).toInt else 7
     val autoRebuild = args.length > 6 && args(6).toBoolean
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-ingest-stream")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     val empty =
       try {

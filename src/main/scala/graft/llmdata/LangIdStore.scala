@@ -233,10 +233,8 @@ object LangIdStore {
 object LangIdMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: LangIdMain <corpusDir> <langIdDir>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-langid-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     try {
       val (nLangs, nTri) = LangIdStore.write(spark, args(0), args(1))

@@ -532,10 +532,8 @@ object GateMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: GateMain <embed|shingle> <corpusDir> <idxDir>")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-gate-index-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     val empty =
       try {
@@ -559,10 +557,8 @@ object LexMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: LexMain <corpusDir> <lexDir>")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-lex-index-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     val empty =
       try {

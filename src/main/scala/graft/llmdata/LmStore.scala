@@ -232,10 +232,8 @@ object LmStore {
 object LmMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: LmMain <corpusDir> <lmDir>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-lm-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     try {
       val (vocab, total) = LmStore.write(spark, args(0), args(1))

@@ -168,10 +168,8 @@ object QualityStore {
 object QualityMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QualityMain <corpusDir> <qDir>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-quality-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     try {
       val (p, n) = QualityStore.write(spark, args(0), args(1))

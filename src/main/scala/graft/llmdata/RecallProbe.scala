@@ -172,12 +172,9 @@ object RecallProbe {
     val spec = args.headOption.getOrElse("/root/testdata/sf0.001")
     val (nQ, k) = (args.lift(1).map(_.toInt).getOrElse(5),
       args.lift(2).map(_.toInt).getOrElse(10))
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

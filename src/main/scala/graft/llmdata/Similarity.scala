@@ -23,15 +23,12 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)
 
-  /** Prefer the native single-pass [[graft.plans.CosineSim]] expression
-    * when the session has [[graft.plans.GraftExtensions]] installed
-    * (one fused codegen'd loop vs three interpreted lambda folds);
-    * fall back to the composable form on untouched sessions. Both are
-    * bit-identical after the round(…, 6). */
-  def cosineBest(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("cosine_sim"))
-      round(call_function("cosine_sim", a, b), 6)
-    else cosine(a, b)
+  /** The scoring cosine: the native single-pass [[graft.plans.CosineSim]]
+    * expression (one fused codegen'd loop where [[cosine]] runs three
+    * interpreted lambda folds), bit-identical to [[cosine]] after the
+    * round(…, 6) (CosineSimSpec). */
+  def cosineBest(a: Column, b: Column): Column =
+    round(call_function("cosine_sim", a, b), 6)
 
   /** JVM twin of `round(cosine_sim(a,b), 6)` for kernel-style operators
     * ([[graft.llmdata.Dedup.embeddingNearDupExact]] and the bucket-local
@@ -80,36 +77,29 @@ object Similarity {
     * double of the same decimal). Ordering by m ≡ ordering by sim
     * (strictly monotone on the round6 range); a NaN sim (zero-norm
     * vector) encodes to Long.MaxValue — exactly the window's
-    * NaN-sorts-largest — and decodes back to NaN. SimilaritySpec pins
-    * the window form ≡ this form on the real corpus; every consumer is
-    * oracle- or spec-gated on row equality. Falls back to the window
-    * form on sessions without [[graft.plans.GraftExtensions]]. */
-  private[llmdata] def simTopK(spark: SparkSession, scored: DataFrame,
-                               k: Int): DataFrame =
-    if (spark.catalog.functionExists("topk_pairs")) {
-      scored
-        .select(col("query_id"), col("neighbor_id"),
-          when(isnan(col("sim")), lit(Long.MaxValue))
-            .otherwise(floor(col("sim") * lit(1000000.0) + lit(0.5))
-              .cast("long")).as("sim_micro"))
-        .groupBy(col("query_id"))
-        .agg(call_function("topk_pairs", col("sim_micro"),
-          col("neighbor_id"), lit(k)).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")))
-        .select(col("query_id"), col("col.id").as("neighbor_id"),
-          (col("pos") + lit(1)).as("rnk"),
-          when(col("col.score") === lit(Long.MaxValue), lit(Double.NaN))
-            .otherwise(col("col.score").cast("double") / lit(1000000.0))
-            .as("sim"))
-        .orderBy(col("query_id"), col("rnk"))
-    } else {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("rnk"), col("sim"))
-        .orderBy(col("query_id"), col("rnk"))
-    }
+    * NaN-sorts-largest — and decodes back to NaN. A NULL sim stays
+    * NULL: `topk_pairs` sorts it last as Long.MinValue, the window's
+    * DESC NULLS LAST, which no |m| ≤ 10⁶ reaches, and it decodes back
+    * to NULL. TopKPairsSpec and SimilaritySpec pin the window form ≡
+    * this form; every consumer is oracle- or spec-gated on row
+    * equality. */
+  private[llmdata] def simTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .select(col("query_id"), col("neighbor_id"),
+        when(isnan(col("sim")), lit(Long.MaxValue))
+          .otherwise(floor(col("sim") * lit(1000000.0) + lit(0.5))
+            .cast("long")).as("sim_micro"))
+      .groupBy(col("query_id"))
+      .agg(call_function("topk_pairs", col("sim_micro"),
+        col("neighbor_id"), lit(k)).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")))
+      .select(col("query_id"), col("col.id").as("neighbor_id"),
+        (col("pos") + lit(1)).as("rnk"),
+        when(col("col.score") === lit(Long.MaxValue), lit(Double.NaN))
+          .when(col("col.score") === lit(Long.MinValue), lit(null))
+          .otherwise(col("col.score").cast("double") / lit(1000000.0))
+          .as("sim"))
+      .orderBy(col("query_id"), col("rnk"))
 
   /** Exact top-k neighbors for the query set `vec_id < nQueries`.
     * Plan shape: the tiny query side broadcasts into a nested-loop
@@ -123,8 +113,8 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
     val sims = q.join(c, col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosineBest(spark, col("qe"), col("ne")))
-    simTopK(spark, sims, k)
+      .withColumn("sim", cosineBest(col("qe"), col("ne")))
+    simTopK(sims, k)
   }
 
   // ------------------------------------------------------------- LSH
@@ -419,13 +409,13 @@ object Similarity {
   /** Column: the `take` cells nearest (by cosine) to `vec`. Centroids
     * stay float arrays so the native `cosine_sim` expression applies
     * (16 codegen'd loops per row, not 48 interpreted lambda folds). */
-  private[llmdata] def nearestCells(spark: SparkSession, vec: Column,
+  private[llmdata] def nearestCells(vec: Column,
                                     centroids: Array[(Int, Seq[Float])],
                                     take: Int): Column = {
     // rank cells by cosine via sort of (negated sim, cell) structs —
     // pure column algebra, no UDF
     val scored = array(centroids.toIndexedSeq.map { case (cid, cvec) =>
-      struct((-cosineBest(spark, vec, typedlit(cvec))).as("neg"),
+      struct((-cosineBest(vec, typedlit(cvec))).as("neg"),
         lit(cid).as("cell"))
     }: _*)
     slice(array_sort(scored), 1, take)
@@ -532,7 +522,7 @@ object Similarity {
       // contract (SimilaritySpec pins bounded ≡ table trainer on the
       // real corpus). The SemDeDup fine model (k ≈ N/width, NOT
       // broadcast-sized) keeps [[twoLevelCentroids]].
-      val base = withCoarseCell(sparkK, corpus, coarse).localCheckpoint()
+      val base = withCoarseCell(corpus, coarse).localCheckpoint()
       val cents = twoLevelCentroidsBounded(sparkK, base, width)
       // densify (cell, sub) → 0..k−1 in (cell, sub) order — a driver
       // map over the bounded array
@@ -731,11 +721,11 @@ object Similarity {
       }
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    simTopK(spark,
+    simTopK(
       probePairs.join(corpus, "cell")
         .join(broadcast(queries), "query_id")
         .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+        .withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   /** Approximate top-k: candidates = corpus vectors sharing any LSH band
@@ -782,8 +772,8 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("qe"), col("neighbor_id"), col("ne"))
       .distinct()
-    simTopK(spark,
-      cand.withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+    simTopK(
+      cand.withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   /** FILTERED vector search — the predicate+ANN combination every
@@ -806,9 +796,9 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
       .join(quality, "neighbor_id")
-    simTopK(spark,
+    simTopK(
       q.join(c, col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+        .withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   /** HYBRID retrieval with reciprocal-rank fusion — the standard
@@ -982,25 +972,14 @@ object Similarity {
     // (O(perArm) state per query, partial map-side) instead of a
     // row_number window over the unbounded per-query candidate set —
     // same (score DESC, id ASC) total order, posexplode index + 1 is
-    // the old rank (see [[simTopK]]; falls back to the window form on
-    // sessions without GraftExtensions)
-    val lex =
-      if (spark.catalog.functionExists("topk_pairs"))
-        lexScores
-          .groupBy(col("query_id"))
-          .agg(call_function("topk_pairs", col("score_micro"),
-            col("neighbor_id"), lit(perArm)).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")))
-          .select(col("query_id"), col("col.id").as("neighbor_id"),
-            (col("pos") + lit(1)).as("rnk_lex"))
-      else {
-        val wLex = Window.partitionBy(col("query_id"))
-          .orderBy(col("score_micro").desc, col("neighbor_id"))
-        lexScores
-          .withColumn("rnk_lex", row_number().over(wLex))
-          .filter(col("rnk_lex") <= perArm)
-          .select(col("query_id"), col("neighbor_id"), col("rnk_lex"))
-      }
+    // the old rank (see [[simTopK]])
+    val lex = lexScores
+      .groupBy(col("query_id"))
+      .agg(call_function("topk_pairs", col("score_micro"),
+        col("neighbor_id"), lit(perArm)).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")))
+      .select(col("query_id"), col("col.id").as("neighbor_id"),
+        (col("pos") + lit(1)).as("rnk_lex"))
 
     // RRF contribution is a pure function of the integer rank.
     // r16 fusion (guide §2.4): UNION + one aggregate instead of the
@@ -1306,11 +1285,11 @@ object Similarity {
     // exact rerank of the R survivors per query
     val qFrame = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    simTopK(spark,
+    simTopK(
       topR
         .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
         .join(broadcast(qFrame), "query_id")
-        .withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+        .withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   // ---------------------------------------------------------- IVF∘PQ
@@ -1832,11 +1811,11 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val qFrame = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    simTopK(spark,
+    simTopK(
       topR
         .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
         .join(broadcast(qFrame), "query_id")
-        .withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+        .withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   // ------------------------------------------------------------- MMR
@@ -2210,16 +2189,16 @@ object Similarity {
 
   private def clusterAssignWith(spark: SparkSession, dir: String,
                                 cents: Array[(Int, Seq[Float])]): DataFrame =
-    assignWithLiterals(spark,
+    assignWithLiterals(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       cents)
 
-  private[llmdata] def assignWithLiterals(spark: SparkSession, corpus: DataFrame,
+  private[llmdata] def assignWithLiterals(corpus: DataFrame,
                                           cents: Array[(Int, Seq[Float])]): DataFrame =
     corpus
       .select(col("vec_id"), col("embedding"))
       .withColumn("nc",
-        element_at(nearestCells(spark, col("embedding"), cents, 1), 1))
+        element_at(nearestCells(col("embedding"), cents, 1), 1))
       .select(col("vec_id"), col("embedding"),
         col("nc").getField("cell").as("cluster"),
         floor(-col("nc").getField("neg") * lit(1000000.0) + lit(0.5))
@@ -2282,11 +2261,11 @@ object Similarity {
     * of two-level training and assignment. The coarse array is the
     * BOUNDED literal model (16 cells by default), so this stays a
     * zero-shuffle map. */
-  private[llmdata] def withCoarseCell(spark: SparkSession, corpus: DataFrame,
+  private[llmdata] def withCoarseCell(corpus: DataFrame,
                                       coarse: Array[(Int, Seq[Float])]): DataFrame =
     corpus.select(col("vec_id"), col("embedding"))
       .withColumn("cell",
-        element_at(nearestCells(spark, col("embedding"), coarse, 1), 1)
+        element_at(nearestCells(col("embedding"), coarse, 1), 1)
           .getField("cell"))
 
   /** Train the per-cell sub-k-means: returns the centroid TABLE
@@ -2295,7 +2274,7 @@ object Similarity {
   private[llmdata] def twoLevelCentroids(spark: SparkSession, corpus: DataFrame,
                                          coarse: Array[(Int, Seq[Float])],
                                          width: Long): DataFrame = {
-    val base = withCoarseCell(spark, corpus, coarse).localCheckpoint()
+    val base = withCoarseCell(corpus, coarse).localCheckpoint()
     var cents = twoLevelSeeds(spark, base, width).localCheckpoint()
     for (_ <- 0 until LloydIters)
       cents = twoLevelIteration(spark, base, cents)
@@ -2328,7 +2307,7 @@ object Similarity {
     * past broadcast size at 1B vectors. */
   private[llmdata] def twoLevelIteration(spark: SparkSession, base: DataFrame,
                                          cents: DataFrame): DataFrame = {
-    val assigned = assignRows(spark, base, cents)
+    val assigned = assignRows(base, cents)
     val means = assigned
       .select(col("cell"), col("sub"), posexplode(col("embedding")))
       .groupBy(col("cell"), col("sub"), col("pos"))
@@ -2352,10 +2331,9 @@ object Similarity {
     * table is k ≈ N/width rows (~2 GB at 1B vectors, the documented
     * two-level argument) — NOT broadcast-sized; the √N-bounded IVF
     * coarse model takes [[twoLevelCentroidsBounded]] instead (r16). */
-  private[llmdata] def assignRows(spark: SparkSession, base: DataFrame,
-                                  cents: DataFrame): DataFrame =
+  private[llmdata] def assignRows(base: DataFrame, cents: DataFrame): DataFrame =
     base.join(cents, "cell")
-      .withColumn("neg", -cosineBest(spark, col("embedding"), col("centroid")))
+      .withColumn("neg", -cosineBest(col("embedding"), col("centroid")))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("neg"), col("sub"), col("cell"),
         col("embedding"))).as("a"))
@@ -2367,8 +2345,8 @@ object Similarity {
   private[llmdata] def assignWithTable(spark: SparkSession, corpus: DataFrame,
                                        coarse: Array[(Int, Seq[Float])],
                                        cents: DataFrame): DataFrame = {
-    val base = withCoarseCell(spark, corpus, coarse)
-    assignRows(spark, base, cents)
+    val base = withCoarseCell(corpus, coarse)
+    assignRows(base, cents)
       .select(col("vec_id"), col("embedding"),
         (col("sub").cast("long") * lit(coarse.length.toLong) + col("cell"))
           .cast("int").as("cluster"),
@@ -2437,13 +2415,13 @@ object Similarity {
       .filter(col("crnk") <= cands)
       .select(col("query_id"), col("neighbor_id"))
     val e = Tables.embeddings(spark, dir)
-    simTopK(spark,
+    simTopK(
       shortlist
         .join(e.select(col("vec_id").as("query_id"), col("embedding").as("qe")),
           "query_id")
         .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")),
           "neighbor_id")
-        .withColumn("sim", cosineBest(spark, col("qe"), col("ne"))), k)
+        .withColumn("sim", cosineBest(col("qe"), col("ne"))), k)
   }
 
   def labelDiversity(spark: SparkSession, dir: String): DataFrame = {

@@ -29,34 +29,21 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("term"))
       .limit(k)
 
-  /** Positional word n-grams of `text` as one row per n-gram — prefers
+  /** Positional word n-grams of `text` as one row per n-gram, through
     * the native [[graft.plans.WordNgrams]] generator (streams n-grams
-    * with no intermediate array materialization) when the session has
-    * GraftExtensions, else the composable transform-and-explode form;
-    * WordNgramsSpec proves the two identical. Duplicates preserved —
-    * this is occurrence grain, unlike the dedup family's distinct
-    * shingle sets. */
-  def ngramRows(spark: SparkSession, docs: DataFrame, n: Int): DataFrame =
-    if (spark.catalog.functionExists("word_ngrams"))
-      docs.select(col("doc_id"), expr(s"word_ngrams(text, $n)"))
-    else {
-      val grams = when(size(col("_toks")) >= n,
-        transform(sequence(lit(0), size(col("_toks")) - n),
-          i => concat_ws(" ",
-            (0 until n).map(j => element_at(col("_toks"), i + j + 1)): _*)))
-        .otherwise(array().cast("array<string>"))
-      // _toks projected separately: interpreted lambdas re-evaluate their
-      // argument per element (see shinglesFromTokens' note)
-      docs.select(col("doc_id"), toks(col("text")).as("_toks"))
-        .select(col("doc_id"), explode(grams).as("ngram"))
-    }
+    * with no intermediate array materialization); WordNgramsSpec proves
+    * it identical to the composable transform-and-explode form.
+    * Duplicates preserved — this is occurrence grain, unlike the dedup
+    * family's distinct shingle sets. */
+  def ngramRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), expr(s"word_ngrams(text, $n)"))
 
   /** Top-k word n-grams by occurrence (collocation mining — the
     * phrase-level view termTopK's unigram counts can't give): one
     * generator fan-out, one hash-partitioned aggregate, deterministic
     * (n DESC, ngram) tie-break. */
   def ngramTopK(spark: SparkSession, dir: String, n: Int, k: Int): DataFrame =
-    ngramRows(spark, Tables.documents(spark, dir), n)
+    ngramRows(Tables.documents(spark, dir), n)
       .groupBy("ngram")
       .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(col("n").desc, col("ngram"))
@@ -1174,8 +1161,6 @@ object TextAnalysis {
     * 1-row sketch cross join is the same allow-listed shape as the
     * global-average queries. */
   def cmsTermCounts(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    require(spark.catalog.functionExists("cms_sketch"),
-      "txt_cms_terms needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     val sketch = Tables.documents(spark, dir)
       .select(explode(toks(col("text"))).as("term"))
       .agg(call_function("cms_sketch", col("term")).as("sk"))

@@ -6,14 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The engine's `SparkSessionExtensions` installer (SURVEY §7.3's
   * "custom Catalyst pieces" hook): registers native expressions under
-  * SQL-callable names. Activate either way:
-  *
-  *  - `SparkSession.builder.withExtensions(new GraftExtensions)`, or
-  *  - `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *
-  * Library code never requires it — call sites probe
-  * `spark.catalog.functionExists` and fall back to the composable
-  * built-in form, so the engine works on an untouched session too.
+  * SQL-callable names. [[graft.Session.builder]] installs it on every
+  * session the engine builds, and library code calls these functions
+  * with no fallback: on a session built without it, the analyzer
+  * rejects the first call with an unresolved-routine error that names
+  * the function. A session built elsewhere installs it with
+  * `withExtensions(new GraftExtensions)` or
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

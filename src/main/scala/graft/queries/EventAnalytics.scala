@@ -698,8 +698,6 @@ object EventAnalytics {
     * aren't reproducible in DuckDB); KmvSpec gates exactness below
     * capacity, error bounds above it, and this query's invariants. */
   def ea17KmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    require(spark.catalog.functionExists("kmv_sketch"),
-      "ea17 needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     val sk = Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(call_function("kmv_sketch", col("user_id")).as("sk"))
@@ -794,8 +792,6 @@ object EventAnalytics {
     * which DuckDB cannot reproduce); the spec gates below-capacity
     * exactness and over-capacity rank error. */
   def ea28QuantileRollup(spark: SparkSession, dir: String): DataFrame = {
-    require(spark.catalog.functionExists("qsample_sketch"),
-      "ea28 needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     Tables.events(spark, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(

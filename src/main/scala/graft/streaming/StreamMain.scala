@@ -82,9 +82,8 @@ object StreamMain {
     val triggerSec = if (args.length > 2) Some(args(2).toInt).filter(_ > 0) else None
     val maxFiles = if (args.length > 3) Some(args(3).toInt).filter(_ > 0) else None
     val retain = if (args.length > 4) math.max(1, args(4).toInt) else 1
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-stream-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     // exit decision AFTER the finally: System.exit doesn't unwind, so
     // calling it inside try would skip spark.stop()

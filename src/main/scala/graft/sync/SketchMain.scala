@@ -1,6 +1,5 @@
 package graft.sync
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable job body that (re)builds the stored sketch table for an
@@ -13,8 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage:
   * {{{
-  *   spark-submit --class graft.sync.SketchMain \
-  *     --conf spark.sql.extensions=graft.plans.GraftExtensions <jar> \
+  *   spark-submit --class graft.sync.SketchMain <jar> \
   *     <eventsDir> <storeDir>
   * }}}
   *
@@ -29,11 +27,8 @@ object SketchMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: SketchMain <eventsDir> <storeDir>")
     val (eventsDir, storeDir) = (args(0), args(1))
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-sketch-build")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     // exit decision AFTER the finally: System.exit doesn't unwind, so
     // calling it inside try would skip spark.stop()

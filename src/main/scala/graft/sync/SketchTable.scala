@@ -44,12 +44,8 @@ object SketchTable {
     * keyed by the unique `event_id`), and exact additive measures —
     * one stored row answers range UNIQUES and range QUANTILES. The
     * input must carry `ts` (timestamp), `user_id`, `event_id`
-    * (unique), `value` (raw 2-decimal double). Needs GraftExtensions
-    * for the qsample functions (custom aggregates have no composable
-    * fallback). */
+    * (unique), `value` (raw 2-decimal double). */
   def buildDaily(events: DataFrame, lgK: Int = 12): DataFrame = {
-    require(events.sparkSession.catalog.functionExists("qsample_sketch"),
-      "SketchTable needs GraftExtensions (spark.sql.extensions=graft.plans.GraftExtensions)")
     events
       .groupBy(to_date(col("ts")).as("day"))
       .agg(

@@ -1,7 +1,5 @@
 package graft.sync
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable job body for the daily 23:00 batch window — the
   * `spark-submit` entry an external scheduler (cron / Airflow / k8s
   * CronJob) invokes, replacing the reference's in-DAG python operators
@@ -29,9 +27,8 @@ object SyncMain {
     val Array(validDir, warehouseDir) = args.take(2)
     val (year, month, day) = (args(2).toInt, args(3).toInt, args(4).toInt)
     val targetFiles = if (args.length > 5) args(5).toInt else 1
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName(s"graft-daily-sync-$year-$month-$day")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     // exit decision is made AFTER the finally: System.exit does not
     // unwind the stack, so calling it inside try would skip spark.stop()

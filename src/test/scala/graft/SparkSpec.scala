@@ -3,20 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session, UTC, small shuffle). */
+/** Shared session for all suites: one JVM-wide session with a small
+  * shuffle, built by [[Session.builder]] like every main. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Session.builder()
       .master("local[4]")
       .appName("graft-test")
       // managed tables (bucketed-join tests) land in a temp dir, not the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // session invariant: events.parquet carries TIMESTAMP(NANOS) (Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -592,7 +592,7 @@ class DedupSpec extends SparkSpec {
     }
     // and the assignment mechanisms agree row-for-row: same cluster id
     // (sub * 1 + 0 = flat cid) and same exact micro-quantized cosine
-    val aFlat = Similarity.assignWithLiterals(spark, corpus, flat)
+    val aFlat = Similarity.assignWithLiterals(corpus, flat)
       .collect().map(r => (r.getLong(0), (r.getInt(2), r.getLong(3)))).toMap
     val aTable = Similarity.assignWithTable(spark, corpus, coarse1, cents)
       .collect().map(r => (r.getLong(0), (r.getInt(2), r.getLong(3)))).toMap

@@ -91,7 +91,7 @@ class SimilaritySpec extends SparkSpec {
     // must agree with the declarative literal form on EVERY vector —
     // the nearestCellLocal parity contract, asserted not assumed
     val cents = Similarity.ivfCentroidsFor(spark, sf)
-    val viaColumns = Similarity.assignWithLiterals(spark,
+    val viaColumns = Similarity.assignWithLiterals(
       graft.Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding")),
       cents)
       .select(col("vec_id"), col("cluster")).collect()
@@ -108,7 +108,7 @@ class SimilaritySpec extends SparkSpec {
     val cells = Similarity.ivfModelCellsFor(spark, sf)
     val e = graft.Tables.embeddings(spark, sf).filter(col("vec_id") < 20)
     val viaColumn = e.select(col("vec_id"),
-        Similarity.nearestCells(spark, col("embedding"), cents, 8).as("p"))
+        Similarity.nearestCells(col("embedding"), cents, 8).as("p"))
       .collect().map { r =>
         r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getInt(1))
       }.toMap
@@ -229,7 +229,7 @@ class SimilaritySpec extends SparkSpec {
     val n = corpus.count()
     val coarse = Similarity.ivfCentroidsFor(spark, sf)
     val width = math.max(1L, n / Similarity.ivfDefaultCells(n).toLong)
-    val base = Similarity.withCoarseCell(spark, corpus, coarse)
+    val base = Similarity.withCoarseCell(corpus, coarse)
       .localCheckpoint()
     val bounded = Similarity.twoLevelCentroidsBounded(spark, base, width)
       .map { case (c, s, cv) => (c, s, cv.toSeq) }.toSeq
@@ -248,7 +248,7 @@ class SimilaritySpec extends SparkSpec {
       .orderBy(col("cell"), col("sub"))
     val dense = cents
       .withColumn("dense", row_number().over(wAll).cast("int") - 1)
-    val refAssign = Similarity.assignRows(spark, base, cents)
+    val refAssign = Similarity.assignRows(base, cents)
       .join(dense.select(col("cell"), col("sub"), col("dense")),
         Seq("cell", "sub"))
       .select(col("vec_id"), col("dense").as("cluster"),

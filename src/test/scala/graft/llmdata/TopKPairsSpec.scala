@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * partitions so the partial/merge/serialize path runs, and on the
   * edge shapes the call sites rely on: groups smaller than k, score
   * ties broken by id ASC, null scores sorting last, and the
-  * round6-micro encoding (incl. NaN) used by Similarity.simTopK.
+  * round6-micro encoding (incl. NaN and NULL) used by
+  * Similarity.simTopK.
   */
 class TopKPairsSpec extends SparkSpec {
   import spark.implicits._
@@ -67,31 +68,31 @@ class TopKPairsSpec extends SparkSpec {
   test("simTopK micro-encoding ≡ the sim-desc window it replaced, incl. NaN sims") {
     // round6-quantized sims exactly as the call sites produce them
     // (Similarity.round6), plus a zero-norm NaN group — NaN sorts
-    // FIRST under sim.desc, which the encoding maps to Long.MaxValue
+    // FIRST under sim.desc, which the encoding maps to Long.MaxValue —
+    // and a group smaller than k with NULL sims, which sort last and
+    // must come back NULL
     val sims = for {
-      q <- 0L until 4L
-      n <- 0L until 30L
+      q <- 0L until 5L
+      n <- 0L until (if (q == 4) 6L else 30L)
       if n != q
     } yield (q, n,
-      if (q == 3 && n < 5) Double.NaN
-      else math.round((math.sin(q * 131 + n * 37) * 0.999) * 1e6) / 1e6)
+      if (q == 4 && n >= 3) None
+      else if (q == 3 && n < 5) Some(Double.NaN)
+      else Some(math.round((math.sin(q * 131 + n * 37) * 0.999) * 1e6) / 1e6))
     val scored = sims.toDF("query_id", "neighbor_id", "sim").repartition(5)
     val k = 7
-    val agg = Similarity.simTopK(spark, scored, k)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
+    // NaN- and NULL-tolerant equality: compare the sims' bit patterns
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0),
+      r.getLong(1), r.getInt(2),
+      if (r.isNullAt(3)) None
+      else Some(java.lang.Double.doubleToLongBits(r.getDouble(3))))).toSeq
+    val agg = rows(Similarity.simTopK(scored, k))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    val ref = scored.withColumn("rnk", row_number().over(w))
+    val ref = rows(scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("sim"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
-    // compare with NaN-tolerant equality (NaN == NaN for this check)
-    def key(t: (Long, Long, Int, Double)) =
-      (t._1, t._2, t._3, java.lang.Double.doubleToLongBits(t._4))
-    assert(agg.map(key).sorted === ref.map(key).sorted)
-    assert(spark.catalog.functionExists("topk_pairs"),
-      "test session must exercise the aggregate path")
+      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("sim")))
+    assert(ref.count(_._4.isEmpty) === 2)
+    assert(agg.sorted === ref.sorted)
   }
 }
