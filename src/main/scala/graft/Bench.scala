@@ -133,15 +133,12 @@ object Bench {
       }
       (name, t.getOrElse(0.0), Seq(p1, p2).flatten)
     }
-    graft.llmdata.Dedup.releaseCaches()
-    graft.llmdata.TextAnalysis.releaseCaches()
-    graft.llmdata.Similarity.releaseCaches()
-    graft.llmdata.AnnIndex.releaseCaches()
-    graft.llmdata.LexStore.releaseCaches()
-    graft.llmdata.LmStore.releaseCaches()
-    graft.llmdata.QualityStore.releaseCaches()
-    graft.llmdata.LangIdStore.releaseCaches()
-    graft.llmdata.Ingest.releaseCaches()
+    // memo builds against hits, so a warm-memo pass reads as one
+    System.err.println("[bench] memo " + Memo.stats.toSeq.sortBy(_._1)
+      .map { case (kind, s) =>
+        f"$kind hits=${s.hits} misses=${s.misses} build_s=${s.buildSeconds}%.3f"
+      }.mkString("; "))
+    Memo.release()
     // r16 (VERDICT r15 #4): the one-line JSON grew with the entry
     // count until a truncated stdout capture cost round 15 its
     // round-over-round geomean. Two defenses, same keys and format the

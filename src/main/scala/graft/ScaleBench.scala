@@ -154,8 +154,7 @@ object ScaleBench {
 
     // the size-trigger point: ANN families read only embeddings, so
     // the doc side stays small and 1.2M vectors fit the sandbox
-    llmdata.Similarity.releaseCaches()
-    llmdata.AnnIndex.releaseCaches()
+    Memo.releaseDir(synthDir)
     val dir1m = java.nio.file.Files
       .createTempDirectory("graft-synth1m").toString
     tools.SynthCorpus.writeCorpus(spark, dir1m,
@@ -801,15 +800,7 @@ object ScaleBench {
       (mode, q, t)
     }
 
-    llmdata.Dedup.releaseCaches()
-    llmdata.TextAnalysis.releaseCaches()
-    llmdata.Similarity.releaseCaches()
-    llmdata.AnnIndex.releaseCaches()
-    llmdata.LexStore.releaseCaches()
-    llmdata.LmStore.releaseCaches()
-    llmdata.QualityStore.releaseCaches()
-    llmdata.LangIdStore.releaseCaches()
-    llmdata.Ingest.releaseCaches()
+    Memo.release()
 
     // drift regression rows (r13, VERDICT r12 #9): one ANN-drift point
     // and one gate-drift point, both at the 0.2 rebuild threshold,

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.GenDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -439,22 +439,17 @@ object AnnIndex {
           "would be silently wrong, rebuild the index")
   }
 
-  private val storedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-  private val appendMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
   /** Session-memoized persisted index per corpus — lets the registry
     * carry a stored-path entry whose FIRST pass pays the real on-disk
     * build (visible in the per-pass bench times) and whose steady
     * state is the disk-scan query a deployment actually runs. */
   def storedIndexFor(spark: SparkSession, corpusDir: String): String =
-    storedMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "ann-stored", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-annindex").toString
       write(spark, corpusDir, d)
       d
-    })
+    }
 
   /** Session-memoized BASE + APPEND composition of the persisted
     * index: the base generation indexes the corpus MINUS a 10% shard
@@ -467,7 +462,7 @@ object AnnIndex {
     * AnnIndexSpec pins query-level equality, and the registered
     * `ann_ivfpq_append` entry is the benched twin. */
   def appendIndexFor(spark: SparkSession, corpusDir: String): String =
-    appendMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "ann-append", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-annindex-append").toString
       writeBase(spark, corpusDir, d, col("vec_id") % 10 =!= 7)
@@ -475,14 +470,7 @@ object AnnIndex {
         .select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 10 === 7))
       d
-    })
-
-  /** Drop the memoized per-corpus index dirs (Bench/ScaleBench call
-    * it after their sweeps; the temp artifacts die with the host). */
-  def releaseCaches(): Unit = {
-    storedMemo.clear()
-    appendMemo.clear()
-  }
+    }
 
   /** Read and VALIDATE the newest committed generation's meta: strict
     * field extraction (any missing field fails loudly naming the

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.plans.Bloom
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,46 +66,23 @@ object Dedup {
     * minhash both walk it several times within a query and across the
     * registry, and per-call `.cache()` on fresh plan objects triggered
     * "already cached" churn in the cache manager (VERDICT r03 #3). The
-    * cache is session-lifetime by default; a long-lived service calls
-    * [[releaseCaches]] after its dedup batch. The memo assumes the data
-    * under `dir` is immutable for the session (append-then-compact
-    * warehouse contract; same as `spark.catalog.cacheTable`) — rewrite
-    * the source mid-session and you must call [[releaseCaches]] first. */
+    * cache is session-lifetime until [[graft.Memo.release]]. */
   def shinglePostings(spark: SparkSession, dir: String): DataFrame =
-    postingsMemo.synchronized {
-      postingsMemo.getOrElseUpdate((spark, dir), {
-        // r15 (guide §2.4): row-local overlapping-capture trigram
-        // windows ([[TextAnalysis.tokenWindowPattern]]) instead of
-        // posexplode + a 2-deep lead chain — drops the
-        // Exchange(doc_id) + sort of the full token stream ahead of
-        // the distinct (window multiset verified identical on the
-        // real corpus; the contamination/span builders share the
-        // same restatement)
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(expr(
-            s"regexp_extract_all(text, '${TextAnalysis.tokenWindowPattern(3)}', 1)"))
-            .as("g"))
-          .distinct()
-          .cache()
-      })
+    Memo(spark, "postings", dir) {
+      // r15: row-local overlapping-capture trigram
+      // windows ([[TextAnalysis.tokenWindowPattern]]) instead of
+      // posexplode + a 2-deep lead chain — drops the
+      // Exchange(doc_id) + sort of the full token stream ahead of
+      // the distinct (window multiset verified identical on the
+      // real corpus; the contamination/span builders share the
+      // same restatement)
+      Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(expr(
+          s"regexp_extract_all(text, '${TextAnalysis.tokenWindowPattern(3)}', 1)"))
+          .as("g"))
+        .distinct()
+        .cache()
     }
-
-  private val postingsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist every memoized postings cache (idempotent). Bench calls
-    * this after the query sweep; Verify's JVM exit covers it there. */
-  def releaseCaches(): Unit = {
-    postingsMemo.synchronized {
-      postingsMemo.valuesIterator.foreach(_.unpersist())
-      postingsMemo.clear()
-    }
-    labelsMemo.clear()
-    pairsMemo.clear()
-    embedPairsMemo.clear()
-    embedLabelsMemo.clear()
-    semLabelsMemo.clear()
-  }
 
   // ------------------------------------------------------- exact dedup
   /** Exact dedup by content hash: one survivor (min doc_id) per distinct
@@ -1484,9 +1461,7 @@ object Dedup {
     * chunk-pair tasks and degenerate masses fail loudly — see
     * [[embedPairsOf]]. The pair set is memoized per (session,
     * corpus, threshold) — [[embeddingClusters]] consumes the same edges,
-    * so the bucket kernel runs once per session, not once per query
-    * (same immutable-input contract as the postings memo; released by
-    * [[releaseCaches]]). */
+    * so the bucket kernel runs once per session, not once per query. */
   def embeddingNearDup(spark: SparkSession, dir: String,
                        threshold: Double): DataFrame =
     embedPairsFor(spark, dir, threshold)
@@ -1494,9 +1469,8 @@ object Dedup {
 
   private def embedPairsFor(spark: SparkSession, dir: String,
                             threshold: Double): DataFrame =
-    embedPairsMemo.computeIfAbsent((spark, dir, threshold),
-      k => new LabelHolder(() =>
-        embedPairsKernel(k._1, k._2, k._3).localCheckpoint())).value
+    Memo(spark, "embed-pairs", dir, threshold)(
+      embedPairsKernel(spark, dir, threshold).localCheckpoint())
 
   private def embedPairsKernel(spark: SparkSession, dir: String,
                                threshold: Double): DataFrame =
@@ -1975,12 +1949,6 @@ object Dedup {
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
-  /** Memoized CC labels over the capped-Jaccard graph: nearDupClusters
-    * and dedupCorpus share them, and the label table is already
-    * materialized (localCheckpoint) when built — same per-(session,
-    * corpus) immutable-input contract as the postings memo, released by
-    * [[releaseCaches]] (localCheckpoint blocks are freed with the
-    * session; the memo only drops the plan references). */
   /** Star-contraction connected components (alternating large-star /
     * small-star, the published MapReduce CC algorithm): each round,
     * LARGE-STAR connects every neighbor u > v to min(Γ⁺(v)) and
@@ -2036,74 +2004,53 @@ object Dedup {
       .union(e.select(col("a").as("id"), col("a").as("cluster_id")).distinct())
   }
 
-  // per-key lazy holders (ProcessedStore pattern): the map insert is an
-  // allocation, the multi-round CC build runs inside the holder's lazy
-  // val — a caller for a DIFFERENT key never blocks behind it
-  private final class LabelHolder(thunk: () => DataFrame) { lazy val value: DataFrame = thunk() }
-  private val labelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Option[Long]), LabelHolder]
-  private val embedPairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double), LabelHolder]
-
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Option[Long]), LabelHolder]
-
   /** Memoized (id_a, id_b) capped-Jaccard edge table per (session, dir,
     * threshold, cap) — the pair generation is the expensive shared
     * stage under cluster resolution, the quality-survivor policy, AND
-    * the triangle census; materialize it once (same immutable-input
-    * contract as [[shinglePostings]]). */
+    * the triangle census; materialize it once. */
   private[llmdata] def jaccardPairsFor(spark: SparkSession, dir: String,
                                        threshold: Double,
                                        maxDocFreq: Option[Long]): DataFrame =
-    pairsMemo.computeIfAbsent((spark, dir, threshold, maxDocFreq),
-      k => new LabelHolder(() =>
-        jaccardPairs(k._1, k._2, k._3, k._4)
-          .select(col("id_a"), col("id_b")).localCheckpoint())).value
+    Memo(spark, "jaccard-pairs", dir, (threshold, maxDocFreq))(
+      jaccardPairs(spark, dir, threshold, maxDocFreq)
+        .select(col("id_a"), col("id_b")).localCheckpoint())
 
+  /** Memoized CC labels over the capped-Jaccard graph: nearDupClusters
+    * and dedupCorpus share them, and the label table is already
+    * materialized (localCheckpoint) when built. */
   private[llmdata] def jaccardLabelsFor(spark: SparkSession, dir: String,
                                         threshold: Double,
                                         maxDocFreq: Option[Long]): DataFrame =
-    labelsMemo.computeIfAbsent((spark, dir, threshold, maxDocFreq),
-      k => new LabelHolder(() => connectedComponents(
-        jaccardPairsFor(k._1, k._2, k._3, k._4)))).value
+    Memo(spark, "jaccard-labels", dir, (threshold, maxDocFreq))(
+      connectedComponents(jaccardPairsFor(spark, dir, threshold, maxDocFreq)))
 
   // CC labels over the embedding pair graph, memoized like the capped-
   // Jaccard labels above: the label table is already materialized
   // (per-round localCheckpoint) when built, and re-running the
   // iterative rounds per call is pure job-latency waste (VERDICT r7
-  // #6). Released by [[releaseCaches]].
-  private val embedLabelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double), LabelHolder]
-
+  // #6).
   private[llmdata] def embedLabelsFor(spark: SparkSession, dir: String,
                                       threshold: Double): DataFrame =
-    embedLabelsMemo.computeIfAbsent((spark, dir, threshold),
-      k => new LabelHolder(() => connectedComponents(
-        embedPairsFor(k._1, k._2, k._3)
-          .select(col("id_a"), col("id_b"))))).value
+    Memo(spark, "embed-labels", dir, threshold)(connectedComponents(
+      embedPairsFor(spark, dir, threshold).select(col("id_a"), col("id_b"))))
 
-  // CC labels over the cluster-scoped SemDeDup pair graph — same
-  // memoized immutable-input contract as embedLabelsFor (the iterative
-  // rounds and the pair kernel are index-build work, not per-query).
-  // Keyed by the MODEL MODE too: the forced two-level path
-  // (dd_semdedup_2l) and the size-dispatched default must never share
-  // a label table trained under the other's clustering.
-  private val semLabelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Boolean), LabelHolder]
-
+  // CC labels over the cluster-scoped SemDeDup pair graph, memoized
+  // like embedLabelsFor (the iterative rounds and the pair kernel are
+  // index-build work, not per-query). Keyed by the MODEL MODE too: the
+  // forced two-level path (dd_semdedup_2l) and the size-dispatched
+  // default must never share a label table trained under the other's
+  // clustering.
   private[llmdata] def semLabelsFor(spark: SparkSession, dir: String,
                                     eps: Double,
                                     twoLevel: Boolean = false): DataFrame =
-    semLabelsMemo.computeIfAbsent((spark, dir, eps, twoLevel),
-      k => new LabelHolder(() => connectedComponents(
-        boundedPairsKeyed(k._1,
-          semAssignOf(k._1, k._2, k._4)
-            .select(lit(0).as("band"), col("cluster").as("bucket"),
-              col("vec_id"), col("embedding")),
-          k._3, EmbedMaxBucketWidth, EmbedMaxChunks,
-          what = "semdedup k-means cluster")
-          .select(col("id_a"), col("id_b"))))).value
+    Memo(spark, "sem-labels", dir, (eps, twoLevel))(connectedComponents(
+      boundedPairsKeyed(spark,
+        semAssignOf(spark, dir, twoLevel)
+          .select(lit(0).as("band"), col("cluster").as("bucket"),
+            col("vec_id"), col("embedding")),
+        eps, EmbedMaxBucketWidth, EmbedMaxChunks,
+        what = "semdedup k-means cluster")
+        .select(col("id_a"), col("id_b"))))
 
   private def semAssignOf(spark: SparkSession, dir: String,
                           twoLevel: Boolean): DataFrame =

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.{GenDir, ManifestStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2277,14 +2277,13 @@ object Ingest {
           rebuild(spark, dirs, snap)
           // the snapshot is TRAINING INPUT only — the committed
           // generation carries everything it needs — so reclaim the
-          // corpus-sized copy and EVERY session memo keyed by it,
-          // model arrays included (review r12: releaseCaches keeps
-          // model memos by design for dirs that get revisited; a
-          // rebuild snapshot never is, so one model set per rebuild
-          // is pure leak over the stream's lifetime)
+          // corpus-sized copy and EVERY session memo keyed by it (a
+          // rebuild snapshot is never read again, so a retained entry
+          // is one leaked model set or cached frame per rebuild over
+          // the stream's lifetime)
+          Memo.releaseDir(snap)
           val (f, p) = GenDir.fsOf(spark, snap)
           f.delete(p, true)
-          Similarity.releaseDir(snap)
           ()
         }
         ()
@@ -2366,9 +2365,6 @@ object Ingest {
     }
 
   // ----------------------------------------------------- registry memo
-  private val ingestMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dirs]
-
   /** Session-memoized ingest composition per corpus — the registry's
     * deployment shape ([[AnnIndex.appendIndexFor]] convention): base
     * artifacts over the corpus MINUS the `doc_id % 10 == 7` shard,
@@ -2376,7 +2372,7 @@ object Ingest {
     * the real bootstrap + ingest; the steady state is reading the
     * composed artifacts. */
   def ingestArtifactsFor(spark: SparkSession, corpusDir: String): Dirs =
-    ingestMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "ingest-artifacts", corpusDir) {
       val work = java.nio.file.Files
         .createTempDirectory("graft-ingest").toString
       val dirs = dirsUnder(work)
@@ -2389,7 +2385,7 @@ object Ingest {
         docs.filter(col("doc_id") % 10 === 7),
         emb.filter(col("vec_id") % 10 === 7), shardId = 0L)
       dirs
-    })
+    }
 
   /** The registered INGEST QUALITY GATE served from the PERSISTED
     * unigram LM (r13, VERDICT r12 #8): the `doc_id % 10 == 7` shard
@@ -2487,8 +2483,6 @@ object Ingest {
       .groupBy(col("fate")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("fate"))
   }
-
-  def releaseCaches(): Unit = ingestMemo.clear()
 }
 
 /** `spark-submit`-able ingestion twin (the IndexMain/LexMain/GateMain

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.GenDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -202,20 +202,17 @@ object LangIdStore {
         (-col("best.neg")).as("score_micro"))
   }
 
-  private val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
   /** Session-memoized model per corpus, trained on the deterministic
     * TRAIN split ([[TextAnalysis.splitColumn]]) — the registered
     * entry's artifact. */
   def trainedFor(spark: SparkSession, corpusDir: String): String =
-    trainedMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "langid-trained", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-langid").toString
       write(spark, corpusDir, d,
         keep = TextAnalysis.splitColumn(col("doc_id")) === "train")
       d
-    })
+    }
 
   /** The registered entry (r15, VERDICT r14 #8): train on the
     * deterministic train split, predict over every scorable document.
@@ -225,8 +222,6 @@ object LangIdStore {
     predict(spark, trainedFor(spark, corpusDir),
       Tables.documents(spark, corpusDir).select(col("doc_id"), col("text")))
       .orderBy(col("doc_id"))
-
-  def releaseCaches(): Unit = trainedMemo.clear()
 }
 
 /** `spark-submit`-able langid-model build job ([[LmMain]] convention). */

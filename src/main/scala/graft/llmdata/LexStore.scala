@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.GenDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -458,23 +458,17 @@ object LexStore {
     probedAt(spark, h, buckets)
   }
 
-  private val storedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
   /** Session-memoized persisted postings dir per corpus (the
     * [[AnnIndex.storedIndexFor]] convention: first pass pays the real
     * on-disk build, steady state is the disk read a deployment
     * runs). */
   def storedLexFor(spark: SparkSession, corpusDir: String): String =
-    storedMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "lex-stored", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-lexindex").toString
       write(spark, corpusDir, d)
       d
-    })
-
-  private val appendMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
+    }
 
   /** Session-memoized BASE + APPEND composition of the persisted
     * postings ([[AnnIndex.appendIndexFor]]'s lexical twin): the base
@@ -486,7 +480,7 @@ object LexStore {
     * (the strongest base+shard ≡ full-rebuild proof available,
     * VERDICT r11 #1). */
   def appendLexFor(spark: SparkSession, corpusDir: String): String =
-    appendMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "lex-append", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-lexindex-append").toString
       writeBase(spark, corpusDir, d, col("doc_id") % 10 =!= 7)
@@ -494,12 +488,7 @@ object LexStore {
         .select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 10 === 7), Some("shard-0"))
       d
-    })
-
-  def releaseCaches(): Unit = {
-    storedMemo.clear()
-    appendMemo.clear()
-  }
+    }
 
   /** The query batch's distinct tokens, collected driver-side —
     * bounded by the batch (nQueries docs), the standard per-batch

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.GenDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,36 +192,28 @@ object LmStore {
           .as("avg_logprob"))
   }
 
-  private val baseMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
   /** Session-memoized BASE LM per corpus (the [[LexStore.appendLexFor]]
     * convention): the model over the corpus MINUS the `doc_id % 10 ==
     * 7` shard — the standing-corpus generation the registered ingest
     * quality-gate entry scores that shard against. */
   def baseLmFor(spark: SparkSession, corpusDir: String): String =
-    baseMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "lm-base", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-lmstore").toString
       writeBase(spark, corpusDir, d, col("doc_id") % 10 =!= 7)
       d
-    })
-
-  private val cappedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), String]
+    }
 
   /** [[baseLmFor]] with the `keepTopK` vocabulary cap — the capped
     * ingest-gate registry entry's model. */
   def baseLmCappedFor(spark: SparkSession, corpusDir: String,
                       k: Long): String =
-    cappedMemo.computeIfAbsent((spark, corpusDir, k), _ => {
+    Memo(spark, "lm-capped", corpusDir, k) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-lmstore-cap").toString
       writeBase(spark, corpusDir, d, col("doc_id") % 10 =!= 7, Some(k))
       d
-    })
-
-  def releaseCaches(): Unit = { baseMemo.clear(); cappedMemo.clear() }
+    }
 }
 
 /** `spark-submit`-able unigram-LM build job (the LexMain/GateMain

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sync.GenDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -146,22 +146,17 @@ object QualityStore {
           .as("avg_logodds"))
   }
 
-  private val baseMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
   /** Session-memoized BASE classifier per corpus ([[LmStore.baseLmFor]]
     * convention): trained on the corpus MINUS the `doc_id % 10 == 7`
     * shard — the standing-corpus generation the registered ingest
     * quality-gate entry scores that shard against. */
   def baseQualityFor(spark: SparkSession, corpusDir: String): String =
-    baseMemo.computeIfAbsent((spark, corpusDir), _ => {
+    Memo(spark, "quality-base", corpusDir) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-qualitystore").toString
       write(spark, corpusDir, d, keep = col("doc_id") % 10 =!= 7)
       d
-    })
-
-  def releaseCaches(): Unit = baseMemo.clear()
+    }
 }
 
 /** `spark-submit`-able classifier build job ([[LmMain]] convention). */

@@ -1,5 +1,6 @@
 package graft.llmdata
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,7 +88,7 @@ object RecallProbe {
       // budget — the recall a deployment buys back without a rebuild
       recall(AnnIndex.ivfPqTopK(spark, combDir, idxA, nQ, k,
         probes = AnnIndex.driftAwareProbes(spark, idxA))))
-    Similarity.releaseCaches() // per-case temp corpora must not pin memos
+    Seq(baseDir, combDir).foreach(Memo.releaseDir) // temp corpora must not pin memos
     r
   }
 
@@ -164,7 +165,7 @@ object RecallProbe {
     val (rr, lr) = score(idxR)
     val bitsA = Dedup.loadEmbedBandIndex(spark, idxA).bitsPerBand
     val bitsR = Dedup.loadEmbedBandIndex(spark, idxR).bitsPerBand
-    Similarity.releaseCaches()
+    Seq(baseDir, combDir).foreach(Memo.releaseDir)
     (ra, rr, la, lr, bitsA, bitsR)
   }
 

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -309,6 +309,26 @@ object Similarity {
     math.min(math.max(NumProbes, (cells + 3) / 4),
       math.max(NumProbes, IvfProbeLogC * ceilLog2(n)))
 
+  /** Memoized corpus cardinality per (session, corpus dir): the
+    * corpus-scaled PQ/PCA pool defaults need N at plan-CONSTRUCTION
+    * time, and Bench/ScaleBench/PlanAuditSpec construct each query
+    * several times — a parquet metadata count is cheap but not free. */
+  private[llmdata] def corpusCount(spark: SparkSession, dir: String): Long =
+    Memo(spark, "corpus-count", dir)(Tables.embeddings(spark, dir).count())
+
+  /** Memoized trained FLAT centroids per (session, corpus dir) —
+    * training is an offline index-build step, not per-query work;
+    * recomputing the Lloyd rounds on every query call would bill index
+    * construction to every search (a rebuilt corpus needs a retrained
+    * index, as any offline ANN index does). Cell count =
+    * [[ivfFlatCells]] (the CAPPED size): past the cap this array is the
+    * coarse LEVEL of the two-level model, never the full model —
+    * [[ivfModelCellsFor]] is the dispatching accessor. */
+  private[llmdata] def ivfCentroidsFor(spark: SparkSession,
+                                       dir: String): Array[(Int, Seq[Float])] =
+    Memo(spark, "ivf-centroids", dir)(ivfCentroids(spark,
+      Tables.embeddings(spark, dir), ivfFlatCells(corpusCount(spark, dir))))
+
   /** Deterministic IVF coarse centroids: seeded from every (N/C)-th
     * corpus vector by vec_id, then refined with [[LloydIters]] rounds of
     * Lloyd's algorithm (assign to nearest-by-cosine centroid → new
@@ -325,42 +345,6 @@ object Similarity {
     * final centroids re-enter the plan as literals, exactly like a
     * trained index shipping with the job. An emptied cell keeps its
     * previous centroid. */
-  private final class CentroidHolder(thunk: () => Array[(Int, Seq[Float])]) {
-    lazy val value: Array[(Int, Seq[Float])] = thunk()
-  }
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
-
-  /** Memoized corpus cardinality per (session, corpus dir): the
-    * corpus-scaled PQ/PCA pool defaults need N at plan-CONSTRUCTION
-    * time, and Bench/ScaleBench/PlanAuditSpec construct each query
-    * several times — a parquet metadata count is cheap but not free.
-    * Same immutable-input contract as the model memos below. */
-  private[llmdata] def corpusCount(spark: SparkSession, dir: String): Long =
-    countMemo.computeIfAbsent((spark, dir),
-      k => java.lang.Long.valueOf(
-        Tables.embeddings(k._1, k._2).count())).longValue()
-
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), CentroidHolder]
-
-  /** Memoized trained FLAT centroids per (session, corpus dir) —
-    * training is an offline index-build step, not per-query work;
-    * recomputing the Lloyd rounds on every query call would bill index
-    * construction to every search. Assumes the corpus under `dir` is
-    * immutable for the session (a rebuilt corpus needs a retrained
-    * index — ship a new session/job for it, as any offline ANN index
-    * does). Cell count = [[ivfFlatCells]] (the CAPPED size): past the
-    * cap this array is the coarse LEVEL of the two-level model, never
-    * the full model — [[ivfModelCellsFor]] is the dispatching
-    * accessor. */
-  private[llmdata] def ivfCentroidsFor(spark: SparkSession,
-                                       dir: String): Array[(Int, Seq[Float])] =
-    centroidMemo.computeIfAbsent((spark, dir),
-      k => new CentroidHolder(() => ivfCentroids(k._1,
-        Tables.embeddings(k._1, k._2),
-        ivfFlatCells(corpusCount(k._1, k._2))))).value
-
   private[llmdata] def ivfCentroids(spark: SparkSession,
                                     corpus: DataFrame,
                                     numCells: Int = NumCells): Array[(Int, Seq[Float])] = {
@@ -437,19 +421,13 @@ object Similarity {
     * 142 at the 10× point). Built with the same JVM kernel the PQ
     * codes index uses ([[nearestCellLocal]] — round-6 cosine, ties to
     * the lower cell, bit-identical to the Column form by its parity
-    * contract), centroids shipped as a broadcast variable. Same
-    * immutable-corpus contract as [[ivfCentroidsFor]]; released by
-    * [[releaseCaches]]. */
-  private val ivfAssignMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), FrameHolder]
-
+    * contract), centroids shipped as a broadcast variable. */
   private[llmdata] def ivfAssignFor(spark: SparkSession, dir: String): DataFrame =
-    ivfAssignMemo.computeIfAbsent((spark, dir), key => new FrameHolder(() => {
-      val sparkK = key._1
-      import sparkK.implicits._
-      val cents = ivfCentroidsFor(sparkK, key._2).sortBy(_._1).map(_._2.toArray)
-      val bc = sparkK.sparkContext.broadcast(cents)
-      Tables.embeddings(sparkK, key._2)
+    Memo(spark, "ivf-assign", dir) {
+      import spark.implicits._
+      val cents = ivfCentroidsFor(spark, dir).sortBy(_._1).map(_._2.toArray)
+      val bc = spark.sparkContext.broadcast(cents)
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .mapPartitions { it =>
           val ct = bc.value
@@ -457,7 +435,7 @@ object Similarity {
         }
         .toDF("neighbor_id", "cell", "ne")
         .localCheckpoint()
-    })).value
+    }
 
   // ------------------------------------- two-level coarse IVF model
   /** The UNCAPPED coarse model as data, not plan structure (VERDICT
@@ -495,21 +473,14 @@ object Similarity {
       col("embedding").as("ne"))
   }
 
-  private final class IvfModelHolder(thunk: () => IvfTableModel) {
-    lazy val value: IvfTableModel = thunk()
-  }
-  private val ivfTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IvfModelHolder]
-
   private[llmdata] def ivfTwoLevelFor(spark: SparkSession,
                                       dir: String): IvfTableModel =
-    ivfTableMemo.computeIfAbsent((spark, dir), key => new IvfModelHolder(() => {
-      val sparkK = key._1
-      import sparkK.implicits._
-      val n = corpusCount(sparkK, key._2)
-      val corpus = Tables.embeddings(sparkK, key._2)
+    Memo(spark, "ivf-two-level", dir) {
+      import spark.implicits._
+      val n = corpusCount(spark, dir)
+      val corpus = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      val coarse = ivfCentroidsFor(sparkK, key._2)
+      val coarse = ivfCentroidsFor(spark, dir)
       val width = math.max(1L, n / ivfDefaultCells(n).toLong)
       // r16 (guide §2): THIS model's fine table is √N-bounded (total
       // cells ≈ ivfDefaultCells(n) — the broadcast-sized coarse-
@@ -523,7 +494,7 @@ object Similarity {
       // real corpus). The SemDeDup fine model (k ≈ N/width, NOT
       // broadcast-sized) keeps [[twoLevelCentroids]].
       val base = withCoarseCell(corpus, coarse).localCheckpoint()
-      val cents = twoLevelCentroidsBounded(sparkK, base, width)
+      val cents = twoLevelCentroidsBounded(spark, base, width)
       // densify (cell, sub) → 0..k−1 in (cell, sub) order — a driver
       // map over the bounded array
       val order = cents.sortBy(t => (t._1, t._2))
@@ -532,7 +503,7 @@ object Similarity {
         .toMap
       val subsOf = order.groupBy(_._1)
         .map { case (c, a) => c -> a.sortBy(_._2).map(_._3) }
-      val bcM = sparkK.sparkContext.broadcast((subsOf, denseOf))
+      val bcM = spark.sparkContext.broadcast((subsOf, denseOf))
       // final assignment in ONE kernel pass: nearest sub within the
       // row's coarse cell (same pinned cosine6 kernel = the retired
       // join+struct-argmin winner), dense id and sim_micro computed
@@ -547,7 +518,7 @@ object Similarity {
             val sub = nearestCellLocal(sc, v)
             val sim = cosine6(v, sc(sub))
             (vid, v, dn((cell.toLong << 32) | sub.toLong),
-              math.floor(sim * 1000000.0 + 0.5).toLong)
+              centroidSimMicro(vid, sim))
           }
         }
         .toDF("vec_id", "embedding", "cluster", "centroid_sim_micro")
@@ -555,7 +526,7 @@ object Similarity {
       val cellArr = order.zipWithIndex
         .map { case ((_, _, cv), i) => (i, cv) }
       IvfTableModel(cellArr, assigned)
-    })).value
+    }
 
   /** Bounded-model two-level Lloyd (r16): the same math as
     * [[twoLevelCentroids]] — identical seeds, identical per-round
@@ -900,19 +871,13 @@ object Similarity {
     * (both hybrid registrations share it). The scalars are collected
     * ONCE from the identical aggregate the inline form computed, so
     * every BM25 term is bit-identical and the DuckDB oracle hash is
-    * unchanged. Same immutable-corpus contract as [[ivfCentroidsFor]];
-    * released by [[releaseCaches]]. */
+    * unchanged. */
   private[llmdata] final case class LexIndex(post: DataFrame, n: Double, avgdl: Double)
-  private final class LexHolder(thunk: () => LexIndex) {
-    lazy val value: LexIndex = thunk()
-  }
-  private val lexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), LexHolder]
 
   private[llmdata] def lexIndexFor(spark: SparkSession, dir: String): LexIndex =
-    lexMemo.computeIfAbsent((spark, dir), key => new LexHolder(() => {
+    Memo(spark, "lex-index", dir) {
       val toks = split(col("text"), " ")
-      val docs = Tables.documents(key._1, key._2)
+      val docs = Tables.documents(spark, dir)
       val dl = docs.select(col("doc_id"), size(toks).as("dl"))
       val st = dl.agg(count(lit(1)).cast("double").as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")).head
@@ -923,7 +888,7 @@ object Similarity {
         .join(dl, "doc_id")
         .localCheckpoint()
       LexIndex(post, st.getDouble(0), st.getDouble(1))
-    })).value
+    }
 
   private[llmdata] def hybridRrfWith(spark: SparkSession, dir: String,
                                      nQueries: Int, k: Int, perArm: Int,
@@ -1106,22 +1071,12 @@ object Similarity {
     out
   }
 
-  // per-key lazy holder (ProcessedStore pattern) so an unrelated
-  // corpus's training job never blocks this one behind a global lock
-  private final class BookHolder(thunk: () => Array[Array[Array[Double]]]) {
-    lazy val value: Array[Array[Array[Double]]] = thunk()
-  }
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), BookHolder]
-
   /** Memoized per (session, corpus dir), like [[ivfCentroidsFor]]:
-    * training is index-build, not per-query work; same immutable-input
-    * contract. */
+    * training is index-build, not per-query work. */
   private[llmdata] def pqCodebooksFor(spark: SparkSession,
                                       dir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent((spark, dir),
-      k => new BookHolder(() => pqCodebooks(k._1,
-        Tables.embeddings(k._1, k._2), pqRotationFor(k._1, k._2)))).value
+    Memo(spark, "pq-codebooks", dir)(pqCodebooks(spark,
+      Tables.embeddings(spark, dir), pqRotationFor(spark, dir)))
 
   /** Deterministic driver-side Lloyd per subspace over the stride
     * sample, in ROTATED space (the [[pqRotationFor]] OPQ basis): seeds
@@ -1374,12 +1329,6 @@ object Similarity {
     cents
   }
 
-  private final class IvfPqHolder(thunk: () => Array[Array[Array[Double]]]) {
-    lazy val value: Array[Array[Array[Double]]] = thunk()
-  }
-  private val ivfPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IvfPqHolder]
-
   /** Memoized residual codebooks per (session, corpus dir) — same
     * index-build-not-per-query contract as [[ivfCentroidsFor]] /
     * [[pqCodebooksFor]]. The coarse model is the ACTIVE one
@@ -1391,17 +1340,10 @@ object Similarity {
     * model as an array. */
   private[llmdata] def ivfPqCodebooksFor(spark: SparkSession,
                                          dir: String): Array[Array[Array[Double]]] =
-    ivfPqMemo.computeIfAbsent((spark, dir),
-      k => new IvfPqHolder(() => ivfPqCodebooks(k._1,
-        Tables.embeddings(k._1, k._2),
-        ivfModelCellsFor(k._1, k._2).map(_._2),
-        pqRotationFor(k._1, k._2, IvfPqM)))).value
-
-  private val ivfPqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), IvfPqCodesHolder]
-  private final class IvfPqCodesHolder(thunk: () => DataFrame) {
-    lazy val value: DataFrame = thunk()
-  }
+    Memo(spark, "ivfpq-codebooks", dir)(ivfPqCodebooks(spark,
+      Tables.embeddings(spark, dir),
+      ivfModelCellsFor(spark, dir).map(_._2),
+      pqRotationFor(spark, dir, IvfPqM)))
 
   /** The STORED IVF-PQ index: one row per corpus vector — coarse cell
     * id, the 16 residual code bytes, and the exact norm — encoded in
@@ -1410,22 +1352,20 @@ object Similarity {
     * on every query batch would bill index construction to every
     * search, and at 1B vectors the encode is the expensive half).
     * This is the ~16×-compressed table a 100 TB deployment persists
-    * next to the embeddings, cell id as the partition key; released
-    * with the session (localCheckpoint blocks) via [[releaseCaches]]. */
+    * next to the embeddings, cell id as the partition key. */
   private[llmdata] def ivfPqCodesFor(spark: SparkSession, dir: String): DataFrame =
-    ivfPqCodesMemo.computeIfAbsent((spark, dir), key => new IvfPqCodesHolder(() => {
-      val sparkK = key._1; val dirK = key._2
-      encodeIvfPq(sparkK,
-        Tables.embeddings(sparkK, dirK).select(col("vec_id"), col("embedding")),
-        ivfModelCellsFor(sparkK, dirK).map(_._2),
-        ivfPqCodebooksFor(sparkK, dirK),
-        pqRotationFor(sparkK, dirK, IvfPqM))
+    Memo(spark, "ivfpq-codes", dir) {
+      encodeIvfPq(spark,
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+        ivfModelCellsFor(spark, dir).map(_._2),
+        ivfPqCodebooksFor(spark, dir),
+        pqRotationFor(spark, dir, IvfPqM))
         // cell id IS the partition key of the stored index: a probe
         // touches probes/C of the partitions, and the query-time
         // cell filter ([[ivfPqTopK]]) prunes whole partitions
         .repartition(col("cell"))
         .localCheckpoint()
-    })).value
+    }
 
   /** The IVF∘PQ ENCODE kernel as a standalone transform — (vec_id,
     * embedding) → (vec_id, cell, code, norm) against a GIVEN model
@@ -1478,34 +1418,6 @@ object Similarity {
         }
       }
       .toDF("vec_id", "cell", "code", "norm")
-  }
-
-  /** Drop the memoized stored-codes index and two-level SemDeDup
-    * assignment references (idempotent; Bench/ScaleBench call it
-    * after their sweeps, mirroring [[Dedup.releaseCaches]] — the
-    * driver-side model memos are tiny arrays and are kept). */
-  def releaseCaches(): Unit = {
-    ivfPqCodesMemo.clear()
-    ivfAssignMemo.clear()
-    ivfTableMemo.clear()
-    semTableMemo.clear()
-    lexMemo.clear()
-  }
-
-  /** Drop EVERY memo entry — model memos included — for one corpus
-    * dir (review r12): [[releaseCaches]]' keep-the-model-arrays stance
-    * is right for benches that revisit a dir, but a rebuild SNAPSHOT
-    * dir is never visited again, so its centroids/codebooks/rotation
-    * are pure leak — one retained model set per rebuild for the
-    * stream's lifetime. All memos share the (session, dir) key. */
-  def releaseDir(dir: String): Unit = {
-    def drop[V](m: java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String), V]): Unit =
-      m.keySet.removeIf(_._2 == dir)
-    drop(countMemo); drop(centroidMemo); drop(pqMemo); drop(ivfPqMemo)
-    drop(pcaMemo); drop(semCentroidMemo); drop(lexMemo)
-    drop(ivfAssignMemo); drop(ivfTableMemo); drop(ivfPqCodesMemo)
-    drop(semTableMemo)
   }
 
   /** Deterministic residual-PQ training: stride-sample the corpus
@@ -1893,18 +1805,10 @@ object Similarity {
   case class PcaModel(n: Long, mean: Array[Double], eigvals: Array[Double],
                       comps: Array[Array[Double]])
 
-  private final class PcaHolder(thunk: () => PcaModel) {
-    lazy val value: PcaModel = thunk()
-  }
-  private val pcaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PcaHolder]
-
   /** Memoized per (session, corpus dir), like [[ivfCentroidsFor]]:
-    * PCA training is index-build work with the same immutable-input
-    * contract. */
+    * PCA training is index-build work. */
   private[llmdata] def pcaModelFor(spark: SparkSession, dir: String): PcaModel =
-    pcaMemo.computeIfAbsent((spark, dir),
-      k => new PcaHolder(() => trainPca(k._1, Tables.embeddings(k._1, k._2)))).value
+    Memo(spark, "pca", dir)(trainPca(spark, Tables.embeddings(spark, dir)))
 
   /** PCA training: one distributed pass accumulates the first and
     * second moments (count, Σx, Σxxᵀ) per partition — d + d² numbers
@@ -2158,9 +2062,6 @@ object Similarity {
   private[llmdata] def semClusterCount(n: Long): Int =
     math.max(NumCells, ((n + SemClusterWidth - 1) / SemClusterWidth).toInt)
 
-  private val semCentroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), CentroidHolder]
-
   /** SemDeDup's FLAT k-means model (k ≤ [[SemFlatMaxK]]): the SAME
     * deterministic Lloyd trainer as the IVF index, but with
     * corpus-scaled k = max(16, ⌈N/width⌉) — a FIXED cluster count
@@ -2172,11 +2073,8 @@ object Similarity {
     * trains and assigns through DataFrames instead (VERDICT r8 #1). */
   private[llmdata] def semCentroidsFor(spark: SparkSession,
                                        dir: String): Array[(Int, Seq[Float])] =
-    semCentroidMemo.computeIfAbsent((spark, dir),
-      k => new CentroidHolder(() => {
-        val n = corpusCount(k._1, k._2)
-        ivfCentroids(k._1, Tables.embeddings(k._1, k._2), semClusterCount(n))
-      })).value
+    Memo(spark, "sem-centroids", dir)(ivfCentroids(spark,
+      Tables.embeddings(spark, dir), semClusterCount(corpusCount(spark, dir))))
 
   /** (vec_id, embedding, cluster, centroid_sim_micro) under the
     * SemDeDup model — FLAT literals while the corpus-scaled k fits
@@ -2201,8 +2099,27 @@ object Similarity {
         element_at(nearestCells(col("embedding"), cents, 1), 1))
       .select(col("vec_id"), col("embedding"),
         col("nc").getField("cell").as("cluster"),
-        floor(-col("nc").getField("neg") * lit(1000000.0) + lit(0.5))
-          .cast("long").as("centroid_sim_micro"))
+        centroidSimMicro(col("vec_id"), -col("nc").getField("neg"))
+          .as("centroid_sim_micro"))
+
+  /** `centroid_sim_micro`: the cosine to the assigned centroid,
+    * micro-quantized. A vector whose cosine is undefined (zero norm or
+    * a NaN component) fails the job, naming its `vec_id`; encoded, it
+    * would read as a real similarity of 0 and feed SemDeDup's keeper
+    * choice and the k-means cohesion means. */
+  private[llmdata] def centroidSimMicro(vecId: Column, sim: Column): Column =
+    when(isnan(sim), raise_error(concat(lit("embedding vec_id="),
+      vecId.cast("string"), lit(UndefinedSim))))
+      .otherwise(floor(sim * lit(1000000.0) + lit(0.5)).cast("long"))
+
+  /** The JVM twin of the Column form, for the assignment kernels. */
+  private[llmdata] def centroidSimMicro(vecId: Long, sim: Double): Long =
+    if (sim.isNaN)
+      throw new IllegalArgumentException(s"embedding vec_id=$vecId$UndefinedSim")
+    else math.floor(sim * 1000000.0 + 0.5).toLong
+
+  private val UndefinedSim =
+    " has no defined cosine to its centroid (zero norm or NaN component)"
 
   // ------------------------------------------- two-level SemDeDup model
   /** TWO-LEVEL SemDeDup clustering (VERDICT r8 #1 — the refinement the
@@ -2240,22 +2157,15 @@ object Similarity {
     * The trained assignment is memoized per (session, corpus) like
     * every other index build ([[ivfCentroidsFor]]): training is
     * offline index work, queries pay the warm join only. */
-  private final class FrameHolder(thunk: () => DataFrame) {
-    lazy val value: DataFrame = thunk()
-  }
-  private val semTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), FrameHolder]
-
   private[llmdata] def semAssignTwoLevelFor(spark: SparkSession,
                                             dir: String): DataFrame =
-    semTableMemo.computeIfAbsent((spark, dir),
-      k => new FrameHolder(() => {
-        val corpus = Tables.embeddings(k._1, k._2)
-          .select(col("vec_id"), col("embedding"))
-        val coarse = ivfCentroidsFor(k._1, k._2)
-        val cents = twoLevelCentroids(k._1, corpus, coarse, SemClusterWidth)
-        assignWithTable(k._1, corpus, coarse, cents).localCheckpoint()
-      })).value
+    Memo(spark, "sem-two-level", dir) {
+      val corpus = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+      val coarse = ivfCentroidsFor(spark, dir)
+      val cents = twoLevelCentroids(spark, corpus, coarse, SemClusterWidth)
+      assignWithTable(spark, corpus, coarse, cents).localCheckpoint()
+    }
 
   /** Corpus with its coarse-cell assignment — the shared first stage
     * of two-level training and assignment. The coarse array is the
@@ -2350,8 +2260,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         (col("sub").cast("long") * lit(coarse.length.toLong) + col("cell"))
           .cast("int").as("cluster"),
-        floor(-col("neg") * lit(1000000.0) + lit(0.5))
-          .cast("long").as("centroid_sim_micro"))
+        centroidSimMicro(col("vec_id"), -col("neg")).as("centroid_sim_micro"))
   }
 
   /** PCA-ACCELERATED top-k — dimension-reduction ANN, the third scale

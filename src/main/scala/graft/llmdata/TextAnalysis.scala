@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1051,36 +1051,19 @@ object TextAnalysis {
     * re-derivation VERDICT r7 flagged as dominating `txt_final_corpus`.
     * Thresholds stay OUT of the memo key on purpose: signals are pure
     * corpus functions, so any (minTokens, …) parameterization reuses
-    * the same cache. Same immutable-input contract as
-    * [[Dedup.shinglePostings]]; released by [[releaseCaches]]. */
+    * the same cache. */
   private[llmdata] def curationSignals(spark: SparkSession, dir: String): DataFrame =
-    signalsMemo.synchronized {
-      signalsMemo.getOrElseUpdate((spark, dir), {
-        val t = toks(col("text"))
-        val base = Tables.documents(spark, dir)
-          .select(col("doc_id"), col("source"), size(t).as("n_tok"),
-            (size(array_distinct(t)).cast("double") / size(t)).as("ttr"))
-        val rep = repetitionRaw(spark, dir, 0.2, 0.18)
-          .select(col("doc_id"), col("dup_ratio"))
-        val lp = unigramRaw(spark, dir)
-          .select(col("doc_id"), col("avg_logprob"))
-        base.join(rep, "doc_id").join(lp, "doc_id").cache()
-      })
+    Memo(spark, "curation-signals", dir) {
+      val t = toks(col("text"))
+      val base = Tables.documents(spark, dir)
+        .select(col("doc_id"), col("source"), size(t).as("n_tok"),
+          (size(array_distinct(t)).cast("double") / size(t)).as("ttr"))
+      val rep = repetitionRaw(spark, dir, 0.2, 0.18)
+        .select(col("doc_id"), col("dup_ratio"))
+      val lp = unigramRaw(spark, dir)
+        .select(col("doc_id"), col("avg_logprob"))
+      base.join(rep, "doc_id").join(lp, "doc_id").cache()
     }
-
-  private val signalsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist the memoized curation-signal caches and drop the
-    * contamination-pair memo (idempotent). Bench calls this after the
-    * query sweep, mirroring [[Dedup.releaseCaches]]. */
-  def releaseCaches(): Unit = {
-    signalsMemo.synchronized {
-      signalsMemo.valuesIterator.foreach(_.unpersist())
-      signalsMemo.clear()
-    }
-    contamMemo.clear()
-  }
 
   /** Per-document first-failing-filter verdicts — [[curationReport]]'s
     * doc-grain intermediate, exposed for composition ([[finalCorpus]]).
@@ -1197,20 +1180,12 @@ object TextAnalysis {
   // the pair set is memoized per (session, corpus, knobs):
   // txt_contamination and the final-corpus accounting share it, and the
   // materialized frame is the bounded (train, test) pair table, not the
-  // window index (the [[Dedup.jaccardPairsFor]] pattern; released by
-  // [[releaseCaches]], same immutable-input contract)
-  private val contamMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Long), ContamHolder]
-  private final class ContamHolder(thunk: () => DataFrame) {
-    lazy val value: DataFrame = thunk()
-  }
-
+  // window index (the [[Dedup.jaccardPairsFor]] pattern)
   private[llmdata] def contaminationRaw(spark: SparkSession, dir: String,
                                         minShared: Int = 2,
                                         maxDocFreq: Long = 16L): DataFrame =
-    contamMemo.computeIfAbsent((spark, dir, minShared, maxDocFreq),
-      k => new ContamHolder(() =>
-        contaminationBuild(k._1, k._2, k._3, k._4).localCheckpoint())).value
+    Memo(spark, "contamination", dir, (minShared, maxDocFreq))(
+      contaminationBuild(spark, dir, minShared, maxDocFreq).localCheckpoint())
 
   private def contaminationBuild(spark: SparkSession, dir: String,
                                  minShared: Int,
@@ -1623,18 +1598,11 @@ object TextAnalysis {
   // trained merge tables are index artifacts: memoized per (session,
   // corpus, rounds) like the IVF centroids / PQ codebooks, so encode
   // queries don't re-pay training per call
-  private final class MergeHolder(thunk: () => Array[(String, String, String)]) {
-    lazy val value: Array[(String, String, String)] = thunk()
-  }
-  private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), MergeHolder]
-
   private[llmdata] def bpeMergesFor(spark: SparkSession, dir: String,
                                     numMerges: Int): Array[(String, String, String)] =
-    mergeMemo.computeIfAbsent((spark, dir, numMerges),
-      k => new MergeHolder(() =>
-        bpeMerges(k._1, k._2, k._3).orderBy(col("rank")).collect()
-          .map(r => (r.getString(1), r.getString(2), r.getString(3))))).value
+    Memo(spark, "bpe-merges", dir, numMerges)(
+      bpeMerges(spark, dir, numMerges).orderBy(col("rank")).collect()
+        .map(r => (r.getString(1), r.getString(2), r.getString(3))))
 
   /** One merge pass over a token sequence — the EXACT driver twin of
     * the Column `aggregate` fold [[bpeMerges]] trains with (acc-last

@@ -13,6 +13,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the function. A session built elsewhere installs it with
   * `withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  *
+  * `topk_pairs(score, id, k)` keeps each group's k best distinct
+  * (score, id) pairs: repeated pairs collapse into one entry, so ids
+  * must be unique within a group for it to match the `row_number`
+  * window form ([[TopKPairsAgg]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -29,6 +29,11 @@ import org.apache.spark.sql.types._
   * deterministic and merge-order-independent — the same argument that
   * makes row_number deterministic under a total ordering.
   *
+  * DUPLICATES COLLAPSE: the buffer is a set, so rows of one group that
+  * repeat the same (score, id) pair count once, where the window form
+  * would rank each copy. An id unique within its group is the caller's
+  * contract; a caller that cannot guarantee it deduplicates first.
+  *
   * NULL scores sort LAST (among themselves by id ASC) — encoded as
   * Long.MinValue, which no caller's score can reach (callers pass
   * micro-unit scores bounded far inside the long range); null ids never

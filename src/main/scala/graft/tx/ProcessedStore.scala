@@ -1,5 +1,6 @@
 package graft.tx
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,21 +48,10 @@ import org.apache.spark.sql.functions._
   * deterministic); see [[withSwapLock]] for the stale-crashed-writer
   * takeover.
   *
-  * The memo assumes the data under `dir` is IMMUTABLE for the session's
-  * lifetime (true for the warehouse layout this models: day partitions
-  * are appended, then compacted, never rewritten in place). Rewriting
-  * the source mid-session serves stale results by design — same
-  * contract as Spark's own `spark.catalog.cacheTable`.
+  * The store path is memoized per (session, dir) in [[graft.Memo]],
+  * under its immutable-input contract.
   */
 object ProcessedStore {
-
-  /** Per-key lazy holders: the outer map insert is cheap (allocation
-    * only), the multi-second enrichment+write runs inside the holder's
-    * own `lazy val`, so callers for a *different* dataset never block
-    * behind an unrelated write — only same-key callers wait. */
-  private final class Holder(thunk: () => String) { lazy val value: String = thunk() }
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Holder]
 
   private def newStoreDir(sfDir: String): String =
     sys.env.get("SPARK_GRAFT_PROCESSED_DIR") match {
@@ -268,8 +258,7 @@ object ProcessedStore {
   /** The materialized 21-column table for `dir`, writing it on first
     * use. Read-side adds the two re-derived intermediates above. */
   def processedTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = memo.computeIfAbsent((spark, dir),
-      k => new Holder(() => materialize(k._1, k._2))).value
+    val path = Memo(spark, "processed", dir)(materialize(spark, dir))
     val td = make_date(col("Year"), col("Month"), col("Day"))
     spark.read.parquet(path)
       .withColumn("transaction_date", td)

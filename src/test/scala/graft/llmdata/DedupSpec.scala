@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.{SparkSpec, Tables}
+import graft.{Memo, SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -507,7 +507,7 @@ class DedupSpec extends SparkSpec {
         assert(cids.length === 1 && cids.head.isDefined,
           s"n=$n: planted group $g split across clusters $cids")
       }
-      Dedup.releaseCaches()
+      Memo.release()
     }
   }
 
@@ -653,7 +653,7 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.9,
       s"near-identical recall $recall collapsed at 25 bits/band " +
         s"(${wide.size}/${nearIdentical.size})")
-    Dedup.releaseCaches()
+    Memo.release()
   }
 
   test("embed-gate drift at the rebuild threshold: recall holds at the frozen width; the re-key restores the width envelope (r13)") {
@@ -676,8 +676,7 @@ class DedupSpec extends SparkSpec {
     assert(la > lr,
       s"frozen width must carry the higher candidate load, got " +
         s"frozen=$la re-keyed=$lr")
-    Dedup.releaseCaches()
-    Similarity.releaseCaches()
+    Memo.release()
   }
 
   test("gate-index compaction folds key segments row-identically, preserves the carried width, and races loudly (r12)") {
@@ -886,8 +885,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(3),
           r.getLong(4), r.getBoolean(5))).toSeq.sortBy(_._1)
     val first = run()
-    Dedup.releaseCaches()
-    Similarity.releaseCaches()
+    Memo.release()
     val second = run()
     assert(first === second,
       "retraining the two-level model from scratch must reproduce every verdict")

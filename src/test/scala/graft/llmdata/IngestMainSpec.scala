@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.{SparkSpec, Tables}
+import graft.{Memo, SparkSpec, Tables}
 import graft.sync.{GenDir, ManifestStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -240,7 +240,7 @@ class IngestMainSpec extends SparkSpec {
     assert(st2.fates.values.sum === 30L)
     assert(ManifestStore.committed(spark, dirs.ledgerDir,
       Ingest.doneBatch(1L)))
-    Similarity.releaseCaches()
+    Memo.releaseDir(snap)
   }
 
   test("N appends past the segment budget auto-compact into one clean generation with pinned answers (r11 #8)") {

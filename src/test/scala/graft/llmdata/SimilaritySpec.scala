@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.{SparkSpec, Tables}
+import graft.{Memo, SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -261,6 +261,28 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSeq.sorted
     assert(got === refAssign)
+  }
+
+  test("a zero-norm embedding fails the centroid assignment naming its vec_id, in the kernel and in the Column form") {
+    // its cosine to every centroid is NaN: encoded, centroid_sim_micro
+    // would read as a real similarity of 0
+    val dir = java.nio.file.Files.createTempDirectory("graft-zeronorm").toString
+    graft.tools.SynthCorpus.clusteredEmbeddings(spark, 400)
+      .select(col("vec_id"),
+        when(col("vec_id") === 101L, array_repeat(lit(0.0f), 64))
+          .otherwise(col("embedding")).as("embedding"))
+      .write.parquet(s"$dir/embeddings.parquet")
+    def failsNaming(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(
+          "embedding vec_id=101 has no defined cosine")), e.getMessage)
+    }
+    try {
+      failsNaming(Similarity.ivfTwoLevelFor(spark, dir))
+      failsNaming(Similarity.assignWithLiterals(Tables.embeddings(spark, dir),
+        Similarity.ivfCentroidsFor(spark, dir)).collect())
+    } finally Memo.releaseDir(dir)
   }
 
   test("IVF defaults: verified scales pinned, cells uncapped past 1M, scanned fraction falls to <0.5% at 1B (r9 #1/#2)") {

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import graft.{SparkSpec, Tables}
+import graft.{Memo, SparkSpec, Tables}
 import graft.sync.{GenDir, ManifestStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -158,6 +158,28 @@ class StreamingIngestSpec extends SparkSpec {
     val snaps = new java.io.File(cp).listFiles()
       .map(_.getName).filter(_.startsWith("rebuild-snap-"))
     assert(snaps.isEmpty, s"leaked snapshots: ${snaps.mkString(", ")}")
+    // and so are the session memos built over them: no memo entry and
+    // no cached plan (the rebuild's shingle postings) reads a snapshot
+    assert(!Memo.dirs.exists(_.contains("rebuild-snap-")),
+      s"memo entries over snapshots: ${Memo.dirs.mkString(", ")}")
+    assert(cachedScanRoots.forall(!_.contains("rebuild-snap-")),
+      s"cached plans over snapshots: ${cachedScanRoots.mkString(", ")}")
+  }
+
+  /** Root paths of every file scan under a cached plan of the session.
+    * The cache manager keeps its entries private, hence the reflection. */
+  private def cachedScanRoots: Seq[String] = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[Seq[org.apache.spark.sql.execution.CachedData]]
+      .flatMap(_.plan.collectLeaves())
+      .collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation }
+      .collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.location.rootPaths.map(_.toString) }
+      .flatten
   }
 
   test("killed INSIDE a micro-batch, the restarted stream replays the same batchId and converges every artifact") {
