@@ -67,7 +67,7 @@ object MaterializedView {
           // commits on the single writer — never races a seal)
           if (committedNow)
             ManifestStore.maybeSnapshot(delta.sparkSession, storeDir,
-              SketchView.SnapshotEvery)
+              Pipeline.SnapshotEvery)
           ()
         }
       }

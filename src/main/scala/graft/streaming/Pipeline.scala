@@ -1,12 +1,12 @@
 package graft.streaming
 
-import graft.tx.{Enrichment, Splitter, TxSchema}
+import graft.tx.{Enrichment, Splitter}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The streaming pipeline (SURVEY §2.11, §3.1): source → P1–P17
-  * enrichment → F1–F4 split → sinks.
+  * enrichment → F1–F4 split → the four bucket stores.
   *
   * Because [[Enrichment.enrich]] is stateless column algebra, the same
   * function serves `spark.read` and `spark.readStream`; this object only
@@ -16,11 +16,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Fan-out strategy: the reference starts up to 5 independent streaming
   * queries that each re-read Kafka and re-run the full enrichment
   * (spark_streaming_consumer.py:442–505 — no cross-query CSE in
-  * Structured Streaming). [[startFanOut]] instead runs ONE query and
-  * fans out inside `foreachBatch` with the batch persisted across the
-  * four bucket writes — the §4.3 fix: one source read, one enrichment
-  * pass, identical per-sink outputs. [[startMultiQuery]] keeps the
-  * reference-faithful N-query mode for behavior-compat runs.
+  * Structured Streaming). [[startFanOutCommitted]] instead runs ONE
+  * query and fans out inside `foreachBatch` with the batch persisted
+  * across the four bucket commits — the §4.3 fix: one source read, one
+  * enrichment pass, identical per-sink outputs. It is the only way the
+  * transaction stream is written; the daily sync
+  * ([[graft.sync.DailySync]]) reads its `valid` store through the same
+  * manifest.
   */
 object Pipeline {
 
@@ -48,88 +50,19 @@ object Pipeline {
     TransactionParser.fromJsonValue(reader.text(dir))
   }
 
-  /** S2 streaming variant: raw 15-column CSV files with header,
-    * producer timestamp synthesized per P18. */
-  def csvFileSource(spark: SparkSession, dir: String,
-                    clock: Column = current_timestamp()): DataFrame =
-    Enrichment.withSynthesizedTimestamp(
-      spark.readStream
-        .option("header", "true")
-        .schema(TxSchema.rawCsv)
-        .csv(dir),
-      clock)
-
-  /** Output paths of one pipeline run, mirroring the reference's four
-    * bucket sinks: valid/fraud → partitioned parquet (K2), errors →
-    * CSV with header (K3), invalid → validation log (K4). */
-  case class OutputLayout(root: String) {
-    val valid = s"$root/valid"
-    val fraud = s"$root/fraud"
-    val errors = s"$root/errors"
-    val invalidLog = s"$root/invalid_log"
-    val checkpoint = s"$root/_checkpoints/fanout"
-    def checkpointFor(sink: String) = s"$root/_checkpoints/$sink"
-  }
-
-  /** Single-query `foreachBatch` fan-out: per micro-batch, enrich (one
-    * codegen span), persist the enriched batch, and write the four
-    * buckets. Exactly-once per sink comes from the single query's
-    * checkpoint + idempotent file sinks. */
-  def startFanOut(source: DataFrame, layout: OutputLayout,
-                  rate: Double = Enrichment.DefaultRate,
-                  trigger: Trigger = Sinks.DefaultTrigger,
-                  clock: Column = current_timestamp(),
-                  coalesceN: Int = 1): StreamingQuery =
-    startFanOutWithRates(source, layout, _ => rate, trigger, clock, coalesceN)
-
-  /** Fan-out with a PER-BATCH rate resolution — the fix for the
-    * reference's stale-rate limitation (SURVEY §4.1: rate fetched once
-    * per process, wrong across day boundaries in a long-running
-    * stream). `rateFor` runs on the driver at the start of every micro
-    * batch (the [[graft.rates.RateService]] per-date cache makes repeat
-    * calls free) and the resolved scalar enters the batch plan as a
-    * literal — same broadcast-scalar shape, fresh each day. */
-  def startFanOutWithRates(source: DataFrame, layout: OutputLayout,
-                           rateFor: java.time.LocalDate => Double,
-                           trigger: Trigger = Sinks.DefaultTrigger,
-                           clock: Column = current_timestamp(),
-                           coalesceN: Int = 1,
-                           today: () => java.time.LocalDate =
-                             () => java.time.LocalDate.now()): StreamingQuery = {
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", layout.checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        val batch = Enrichment.enrich(rawBatch, rateFor(today()), clock)
-        batch.persist()
-        try {
-          Splitter.valid(batch).coalesce(coalesceN)
-            .write.mode("append").partitionBy("Year", "Month", "Day")
-            .parquet(layout.valid)
-          Splitter.fraud(batch).coalesce(coalesceN)
-            .write.mode("append").partitionBy("Year", "Month", "Day")
-            .parquet(layout.fraud)
-          Enrichment.project(Splitter.errors(batch)).coalesce(coalesceN)
-            .write.mode("append").option("header", "true")
-            .csv(layout.errors)
-          Splitter.invalid(batch)
-            .select(Sinks.validationLogColumns.map(col): _*)
-            .coalesce(coalesceN)
-            .write.mode("append").option("header", "true")
-            .csv(layout.invalidLog)
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** Bucket layout of a MANIFEST-COMMITTED pipeline run: each bucket is
-    * a [[graft.sync.ManifestStore]] root rather than a bare directory. */
-  /** Ledger fold cadence of [[startFanOutCommitted]] (manifests
-    * replayed per read stay under this). */
+  /** Ledger fold cadence of every manifest-committed streaming writer
+    * ([[startFanOutCommitted]], [[SketchView]], [[MaterializedView]],
+    * the LLM-data ingest): every K commits the ledger collapses to one
+    * snapshot, so reads parse ≤ K manifests on top of it. Small enough
+    * to bound metadata, large enough that fold cost (rewrite of one
+    * small composition file) stays negligible against K data
+    * commits. */
   val SnapshotEvery = 16
 
+  /** Bucket layout of a pipeline run, mirroring the reference's four
+    * bucket sinks (valid/fraud → K2, errors → K3, invalid → the K4
+    * validation log): each bucket is a [[graft.sync.ManifestStore]]
+    * root rather than a bare directory. */
   case class StoreLayout(root: String) {
     val valid = s"$root/valid"
     val fraud = s"$root/fraud"
@@ -139,24 +72,32 @@ object Pipeline {
     def all: Seq[String] = Seq(valid, fraud, errors, invalidLog)
   }
 
-  /** Manifest-committed fan-out — [[startFanOut]]'s durability upgrade
-    * and the engine [[StreamMain]] ships: every micro batch commits
-    * each bucket into its [[graft.sync.ManifestStore]] under the
-    * batch's OWN immutable directory, manifest renamed in last. Plain
-    * `.write.mode("append")` inside `foreachBatch` is exactly-once only
-    * while sink writes and the offset commit never tear: a crash
-    * between the last bucket write and the checkpoint commit replays
-    * the batch into sinks that already absorbed it — duplicates. Here a
-    * replayed batch finds its id in each store's ledger and skips the
-    * stores it already reached (a partially-committed batch re-runs
-    * only its missing buckets), so crash-at-any-point ≡ the uncrashed
-    * run — the SketchView/MaterializedView commit contract, now on the
-    * raw pipeline itself. valid/fraud/errors keep the reference's
-    * date partitioning as a single `ymd` partition column
-    * (Year·10⁴+Month·10²+Day; readers drop it); the 5-column
-    * validation log is date-free and lands under one constant
-    * partition. `onFreshBatch` fires once per batch that found work —
-    * the [[StreamMain]] status counter. */
+  /** Manifest-committed fan-out — the engine [[StreamMain]] ships:
+    * every micro batch commits each bucket into its
+    * [[graft.sync.ManifestStore]] under the batch's OWN immutable
+    * directory, manifest renamed in last. Plain `.write.mode("append")`
+    * inside `foreachBatch` is exactly-once only while sink writes and
+    * the offset commit never tear: a crash between the last bucket
+    * write and the checkpoint commit replays the batch into sinks that
+    * already absorbed it — duplicates. Here a replayed batch finds its
+    * id in each store's ledger and skips the stores it already reached
+    * (a partially-committed batch re-runs only its missing buckets),
+    * so crash-at-any-point ≡ the uncrashed run — the
+    * SketchView/MaterializedView commit contract, now on the raw
+    * pipeline itself. valid/fraud/errors keep the reference's date
+    * partitioning as a single `ymd` partition column
+    * (Year·10⁴+Month·10²+Day; the daily sync prunes on it, other
+    * readers drop it); the 5-column validation log is date-free and
+    * lands under one constant partition. `onFreshBatch` fires once per
+    * batch that found work — the [[StreamMain]] status counter.
+    *
+    * The rate is resolved PER BATCH — the fix for the reference's
+    * stale-rate limitation (SURVEY §4.1: rate fetched once per
+    * process, wrong across day boundaries in a long-running stream).
+    * `rateFor(today())` runs on the driver at the start of every
+    * micro batch (the [[graft.rates.RateService]] per-date cache makes
+    * repeat calls free) and the resolved scalar enters the batch plan
+    * as a literal — same broadcast-scalar shape, fresh each day. */
   def startFanOutCommitted(source: DataFrame, layout: StoreLayout,
                            rateFor: java.time.LocalDate => Double,
                            trigger: Trigger = Sinks.DefaultTrigger,
@@ -227,30 +168,5 @@ object Pipeline {
         ()
       }
       .start()
-  }
-
-  /** Reference-faithful multi-query mode: independent streaming queries
-    * per sink, each with its own checkpoint, all re-deriving from the
-    * shared enriched plan (spark_streaming_consumer.py:442–505).
-    * `includeConsole` adds the reference's 5th query — the 8-column
-    * console debug view (:448–457). */
-  def startMultiQuery(source: DataFrame, layout: OutputLayout,
-                      rate: Double = Enrichment.DefaultRate,
-                      trigger: Trigger = Sinks.DefaultTrigger,
-                      includeConsole: Boolean = false): Seq[StreamingQuery] = {
-    val enriched = Enrichment.enrich(source, rate)
-    (if (includeConsole)
-       Seq(Sinks.console(
-         enriched.select(Enrichment.consoleColumns.map(col): _*),
-         layout.checkpointFor("console"), trigger, truncate = true))
-     else Seq.empty) ++ Seq(
-      Sinks.partitionedParquet(Splitter.valid(enriched), layout.valid,
-        layout.checkpointFor("valid"), trigger),
-      Sinks.partitionedParquet(Splitter.fraud(enriched), layout.fraud,
-        layout.checkpointFor("fraud"), trigger),
-      Sinks.csvWithHeader(Enrichment.project(Splitter.errors(enriched)),
-        layout.errors, layout.checkpointFor("errors"), trigger),
-      Sinks.validationLog(Splitter.invalid(enriched), layout.invalidLog,
-        layout.checkpointFor("invalid"), trigger))
   }
 }

@@ -3,21 +3,19 @@ package graft.streaming
 import graft.tx.Enrichment
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The reference's sink surface, K1–K6 of SURVEY §2.2.
+/** The reference's sink surface, K1–K6 of SURVEY §2.2, as far as it
+  * lives outside the fan-out.
   *
-  * Streaming sinks default to the reference's knobs: `append` output
-  * mode, 5-second processing-time trigger, `coalesce(1)` (one file per
-  * batch — spark_streaming_consumer.py:317,350), per-sink checkpoint
-  * directory. Tests override the trigger with `Trigger.AvailableNow` so
-  * they drain the source and terminate.
-  *
-  * At 100 TB the `coalesce(1)` default is a parity knob, not a
-  * recommendation — pass `coalesceN` matching the sink's downstream
-  * file-size target (the partitionBy(year,month,day) layout keeps
-  * per-partition file counts bounded either way).
+  * K2–K4 (valid/fraud parquet, errors CSV, validation log) are the
+  * four manifest-committed bucket stores of
+  * [[Pipeline.startFanOutCommitted]], which projects the validation
+  * log through [[validationLogColumns]]; K1 (the console debug view)
+  * has no counterpart. What remains here: the reference's trigger
+  * default (5-second processing time — tests and drains pass
+  * `Trigger.AvailableNow`), the K5 Kafka producer and the K6
+  * warehouse append the daily sync loads through.
   */
 object Sinks {
 
@@ -26,50 +24,6 @@ object Sinks {
   /** Validation-log projection, K4 (spark_streaming_consumer.py:377). */
   val validationLogColumns: Seq[String] =
     Seq("Card", "User", "Amount_USD", "invalid_reason", "timestamp")
-
-  private def base(df: DataFrame, checkpoint: String, trigger: Trigger,
-                   coalesceN: Int): DataStreamWriter[Row] =
-    df.coalesce(coalesceN).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-
-  /** K1: console sink (spark_streaming_consumer.py:285–304). */
-  def console(df: DataFrame, checkpoint: String,
-              trigger: Trigger = DefaultTrigger,
-              truncate: Boolean = false): StreamingQuery =
-    base(df, checkpoint, trigger, 1)
-      .format("console")
-      .option("truncate", truncate.toString)
-      .start()
-
-  /** K2: partitioned parquet sink (spark_streaming_consumer.py:306–332) —
-    * append parquet partitioned by Year/Month/Day, checkpointed. */
-  def partitionedParquet(df: DataFrame, path: String, checkpoint: String,
-                         trigger: Trigger = DefaultTrigger,
-                         coalesceN: Int = 1): StreamingQuery =
-    base(df, checkpoint, trigger, coalesceN)
-      .format("parquet")
-      .option("path", path)
-      .partitionBy("Year", "Month", "Day")
-      .start()
-
-  /** K3: CSV sink with header (spark_streaming_consumer.py:334–365). */
-  def csvWithHeader(df: DataFrame, path: String, checkpoint: String,
-                    trigger: Trigger = DefaultTrigger,
-                    coalesceN: Int = 1): StreamingQuery =
-    base(df, checkpoint, trigger, coalesceN)
-      .format("csv")
-      .option("path", path)
-      .option("header", "true")
-      .start()
-
-  /** K4: validation-log sink — 5-column projection of rejected rows →
-    * CSV (spark_streaming_consumer.py:367–392). */
-  def validationLog(invalid: DataFrame, path: String, checkpoint: String,
-                    trigger: Trigger = DefaultTrigger): StreamingQuery =
-    csvWithHeader(invalid.select(validationLogColumns.map(col): _*),
-      path, checkpoint, trigger)
 
   /** K5: Kafka producer sink — JSON value keyed by Card, ordered
     * at-least-once delivery (pos_simulator.py:45–60,113–160). Requires

@@ -44,8 +44,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * O(#days) rows), and a batch rewrites only the day rows it touched.
   *
   * Manifest history is BOUNDED (r8): the streaming writer folds the
-  * ledger into a snapshot manifest every [[SnapshotEvery]] commits
-  * ([[graft.sync.ManifestStore.maybeSnapshot]] — side-channel
+  * ledger into a snapshot manifest every [[Pipeline.SnapshotEvery]]
+  * commits ([[graft.sync.ManifestStore.maybeSnapshot]] — side-channel
   * `<id>.snap` files, so a snapshot never competes with batch ids),
   * readers replay only manifests above the newest fold, and
   * [[vacuum]] drops the folded history — per-read ledger cost stays
@@ -53,13 +53,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * niche Iceberg/Delta metadata checkpoints fill.
   */
 object SketchView {
-
-  /** Fold cadence for the streaming writer: every K commits the
-    * ledger collapses to one snapshot, so reads parse ≤ K manifests
-    * on top of it. Small enough to bound metadata, large enough that
-    * fold cost (rewrite of one small composition file) stays
-    * negligible against K data commits. */
-  val SnapshotEvery = 16
 
   /** Maintain the per-day sketch table from a streaming events frame
     * (`ts`, `user_id`, `event_id`, `value`).
@@ -91,7 +84,7 @@ object SketchView {
         // commits on the single writer, so it never races a seal
         if (committedNow)
           ManifestStore.maybeSnapshot(batch.sparkSession, storeDir,
-            SnapshotEvery)
+            Pipeline.SnapshotEvery)
         ()
       }
       .start()

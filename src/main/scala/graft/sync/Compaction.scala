@@ -3,43 +3,12 @@ package graft.sync
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-/** Small-file compaction for the streaming parquet sink.
-  *
-  * The K2 sink writes `coalesce(1)` per micro-batch (reference parity,
-  * spark_streaming_consumer.py:317), so a day's partition accumulates
-  * one file per 5-second batch — thousands of tiny files that slow every
-  * later scan (footer reads + task-per-file scheduling dominate). This
-  * job rewrites one day's partition into `targetFiles` files using
-  * dynamic partition overwrite, so only the compacted partition is
-  * replaced and concurrent readers of other days are untouched.
-  *
-  * Run it where the reference runs its daily sync (23:00 batch window),
-  * after [[DailySync]] consumed the day.
+/** Rewrites of plain `Year=/Month=/Day=` partitioned parquet tables
+  * ([[purgeKeys]]). The transaction stream's bucket stores are
+  * manifest-committed ([[ManifestStore]]) and are never rewritten
+  * here: their single writer is the stream.
   */
 object Compaction {
-
-  /** Compact one Year/Month/Day partition; returns its row count. */
-  def compactDay(spark: SparkSession, dir: String,
-                 year: Int, month: Int, day: Int,
-                 targetFiles: Int = 1): Long = {
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // eager localCheckpoint SEVERS the lineage: the overwrite below
-      // must never be able to re-read the files it is replacing (a
-      // cache can be evicted and silently recompute from the
-      // overwritten path — a checkpoint cannot)
-      val dayDf = spark.read.parquet(dir)
-        .where(col("Year") === year && col("Month") === month && col("Day") === day)
-        .localCheckpoint(true)
-      val n = dayDf.count()
-      dayDf.repartition(targetFiles)
-        .write.mode("overwrite").partitionBy("Year", "Month", "Day")
-        .parquet(dir)
-      n
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-  }
 
   /** Targeted DELETE-by-key over the partitioned warehouse (the
     * right-to-be-forgotten job): remove every row whose `keyCol` is in
@@ -53,8 +22,11 @@ object Compaction {
     * result); pass 2 re-reads only those partitions (partition pruning
     * via an isin filter on partition columns — PushedFilters territory,
     * not a full scan), ANTI joins the key list, and dynamic-overwrites
-    * exactly those partitions. Lineage is severed before the overwrite
-    * for the same reason as [[compactDay]]. The key list broadcasts; a
+    * exactly those partitions. Lineage is severed (eager
+    * `localCheckpoint`) before the overwrite: the overwrite must never
+    * be able to re-read the files it is replacing (a cache can be
+    * evicted and silently recompute from the overwritten path — a
+    * checkpoint cannot). The key list broadcasts; a
     * key list too large to broadcast would instead bucket-join per
     * partition — same two-pass structure.
     *

@@ -9,31 +9,40 @@ import org.apache.spark.sql.functions.col
   * bigquery_update_scheduler.py:59–148,163–282): its ~200 LoC of
   * recursive WebHDFS listing, regex partition-column reattachment,
   * pandas concat and XCom plumbing collapse into a partition-pruned
-  * `spark.read.parquet(...).where(...)`, and the BigQuery
+  * read of the stream's `valid` store, and the BigQuery
   * reorder-before-upload (:199–225) is the K6 select-order enforcement.
   *
-  * Scale: the `where` on Year/Month/Day hits partition pruning (the
-  * valid sink is `partitionBy("Year","Month","Day")`), so the job reads
-  * exactly one day's files regardless of table size — PlanSpec asserts
-  * `PartitionFilters` on this plan. The count is taken on the pruned
-  * day frame before the append, mirroring the reference's row-count
-  * verification log (:276–277).
+  * Input: the `valid` bucket store that
+  * [[graft.streaming.Pipeline.startFanOutCommitted]] writes, read
+  * through [[ManifestStore.readStore]] — so the sync sees exactly the
+  * committed batches: a batch whose data landed but whose manifest did
+  * not (a crash between the two) never reaches the warehouse.
+  *
+  * Scale: the `where` on the store's `ymd` partition column
+  * (Year·10⁴+Month·10²+Day) reaches every per-batch scan as a
+  * partition filter, so the job reads exactly one day's files
+  * regardless of table size — PlanSpec asserts `PartitionFilters` on
+  * this plan. The count is taken on the pruned day frame before the
+  * append, mirroring the reference's row-count verification log
+  * (:276–277); both read the same manifest-listed files.
   */
 object DailySync {
 
-  /** One day's partition of the valid stream, partition-pruned. */
+  /** One day's rows of the committed valid store, partition-pruned;
+    * None when the store has no commit yet. */
   def dayPartition(spark: SparkSession, validDir: String,
-                   year: Int, month: Int, day: Int): DataFrame =
-    spark.read.parquet(validDir)
-      .where(col("Year") === year && col("Month") === month && col("Day") === day)
+                   year: Int, month: Int, day: Int): Option[DataFrame] =
+    ManifestStore.readStore(spark, validDir)
+      .map(_.where(col("ymd") === year * 10000 + month * 100 + day))
 
   /** Sync one day into the warehouse table; returns the appended row
-    * count (the reference's verification metric). */
+    * count (the reference's verification metric), 0 for an empty
+    * store. */
   def syncDay(spark: SparkSession, validDir: String, warehouseDir: String,
-              year: Int, month: Int, day: Int): Long = {
-    val dayDf = dayPartition(spark, validDir, year, month, day)
-    val n = dayDf.count()
-    Sinks.warehouseAppend(dayDf, warehouseDir)
-    n
-  }
+              year: Int, month: Int, day: Int): Long =
+    dayPartition(spark, validDir, year, month, day).fold(0L) { dayDf =>
+      val n = dayDf.count()
+      Sinks.warehouseAppend(dayDf, warehouseDir)
+      n
+    }
 }

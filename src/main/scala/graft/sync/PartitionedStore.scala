@@ -24,18 +24,6 @@ object PartitionedStore {
     f.exists(p)
   }
 
-  /** Atomically-created marker file (idempotence ledger); returns false
-    * if it already existed. */
-  def createMarker(spark: SparkSession, path: String): Boolean = {
-    val (f, p) = fs(spark, path)
-    f.mkdirs(p.getParent)
-    f.createNewFile(p)
-  }
-
-  /** Marker presence. */
-  def markerExists(spark: SparkSession, path: String): Boolean =
-    exists(spark, path)
-
   /** Overwrite exactly the partitions present in `merged` (dynamic
     * partition overwrite), leaving every other partition's files
     * untouched. `merged` may read from `storeDir` itself: lineage is

@@ -20,9 +20,13 @@ import org.apache.spark.sql.functions._
   * estimate over the whole table — the numbers an operator eyeballs
   * against yesterday's) and exits non-zero when the build covers zero
   * days, so an empty source pages instead of "succeeding". The write
-  * replaces the store atomically per day partition
-  * ([[PartitionedStore.overwritePartitions]]) — a concurrent reader
-  * never sees a half-written table. */
+  * replaces the store's day partitions by dynamic partition overwrite
+  * ([[PartitionedStore.overwritePartitions]]), which is NOT atomic: it
+  * deletes each day directory before renaming its replacement in, so a
+  * concurrent reader can see a day missing, and a crash between the
+  * two loses the day (the failure [[ManifestStore]]'s scaladoc
+  * describes). What holds instead: every row is rebuilt from the
+  * events, so re-running the job repairs the store. */
 object SketchMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: SketchMain <eventsDir> <storeDir>")

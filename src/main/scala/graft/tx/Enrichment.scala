@@ -59,11 +59,6 @@ object Enrichment {
       .withColumnRenamed("time_str", "Time_Formatted")
       .select(outputColumnsV1.map(col): _*)
 
-  /** Console-sink 8-column subset (spark_streaming_consumer.py:448–457). */
-  val consoleColumns: Seq[String] = Seq(
-    "DateTime_Hour_Key", "Card", "Merchant_Name", "Amount_USD", "Amount_VND",
-    "Exchange_Rate", "Day_of_Week", "Is_Weekend")
-
   /** P3–P16: enrich a raw-schema frame (TxSchema.raw). `clock` is
     * injectable so tests/oracles can pin Processed_Timestamp; `rate` is
     * the driver-resolved daily exchange rate (SURVEY §2.1 S4). */

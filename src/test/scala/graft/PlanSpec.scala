@@ -1,7 +1,8 @@
 package graft
 
 import graft.queries.Relational
-import graft.sync.DailySync
+import graft.streaming.{Pipeline, StreamMain, TransactionParser}
+import graft.sync.{DailySync, ManifestStore}
 import graft.tx.{Enrichment, RawTransactions, Splitter, TxQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
@@ -107,24 +108,27 @@ class PlanSpec extends SparkSpec {
       s"q6 scan predicates not pushed:\n$p")
   }
 
-  test("daily sync read is partition-pruned to one Year/Month/Day") {
+  test("daily sync read of the stream's valid store is partition-pruned to one ymd") {
+    // the store is written the way the stream writes it: a StreamMain
+    // drain commits each micro batch under the manifest, ymd-partitioned
     val root = Files.createTempDirectory("graft-plan").toString
-    val validDir = s"$root/valid"
-    val processed = Enrichment.enrich(
-      RawTransactions.fromEvents(spark, sf), Enrichment.DefaultRate,
-      to_timestamp(lit("2024-06-01 00:00:00")))
-    Splitter.valid(processed)
-      .write.partitionBy("Year", "Month", "Day").parquet(validDir)
+    TransactionParser.toJsonValue(RawTransactions.fromEvents(spark, sf))
+      .select("value").coalesce(1).write.text(s"$root/input")
+    StreamMain.run(spark, s"$root/input", s"$root/out",
+      rateFor = _ => Enrichment.DefaultRate,
+      clock = to_timestamp(lit("2024-06-01 00:00:00")))
+    val validDir = Pipeline.StoreLayout(s"$root/out").valid
 
-    val firstDay = spark.read.parquet(validDir)
+    val firstDay = ManifestStore.readStore(spark, validDir).get
       .select("Year", "Month", "Day").distinct()
       .orderBy("Year", "Month", "Day").limit(1).collect()(0)
     val (y, m, d) = (firstDay.getInt(0), firstDay.getInt(1), firstDay.getInt(2))
 
-    val p = plan(DailySync.dayPartition(spark, validDir, y, m, d))
-    assert(p.contains("PartitionFilters:") &&
-      p.contains(s"(Year#") && p.contains(s"= $y"),
-      s"no partition pruning in:\n$p")
+    val p = plan(DailySync.dayPartition(spark, validDir, y, m, d).get)
+    val pruned = p.linesIterator.filter(_.trim.startsWith("PartitionFilters:")).toSeq
+    assert(pruned.nonEmpty && pruned.forall(l =>
+      l.contains("(ymd#") && l.contains(s"= ${y * 10000 + m * 100 + d})")),
+      s"no ymd partition pruning in:\n$p")
 
     // end-to-end: sync appends exactly that day's rows in K6 order
     val n = DailySync.syncDay(spark, validDir, s"$root/warehouse", y, m, d)

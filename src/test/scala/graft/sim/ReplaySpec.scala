@@ -1,10 +1,10 @@
 package graft.sim
 
 import graft.SparkSpec
-import graft.streaming.{Pipeline, TransactionParser}
+import graft.streaming.{Pipeline, StreamMain, TransactionParser}
+import graft.sync.ManifestStore
 import graft.tx.{Enrichment, Splitter, TxSchema}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Producer semantics (§3.2) against the reference's golden corpus:
@@ -47,17 +47,15 @@ class ReplaySpec extends SparkSpec {
     // one file per emission
     assert(new java.io.File(inDir).list().count(_.startsWith("part-")) === 4)
 
-    val layout = Pipeline.OutputLayout(s"$root/out")
-    val q = Pipeline.startFanOut(
-      Pipeline.jsonFileSource(spark, inDir), layout,
-      Enrichment.DefaultRate, Trigger.AvailableNow,
-      to_timestamp(lit("2024-06-05 12:00:00")))
-    q.awaitTermination()
+    StreamMain.run(spark, inDir, s"$root/out",
+      rateFor = _ => Enrichment.DefaultRate,
+      clock = to_timestamp(lit("2024-06-05 12:00:00")))
+    val layout = Pipeline.StoreLayout(s"$root/out")
+    def count(store: String) = ManifestStore.readStore(spark, store).get.count()
 
     val expected = Enrichment.enrich(parsedBack, Enrichment.DefaultRate)
-    assert(spark.read.parquet(layout.valid).count() ===
-      Splitter.valid(expected).count())
-    assert(spark.read.parquet(layout.fraud).count() === 7) // golden invariant
-    assert(spark.read.option("header", "true").csv(layout.errors).count() === 4)
+    assert(count(layout.valid) === Splitter.valid(expected).count())
+    assert(count(layout.fraud) === 7) // golden invariant
+    assert(count(layout.errors) === 4)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.sync.ManifestStore
 import graft.tx.{Enrichment, RawTransactions, Splitter}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,7 +12,9 @@ import java.nio.file.Files
   * batch pipeline's outputs, because enrichment+split are stateless.
   * Input is the deterministic RawTransactions view serialized to JSON
   * lines (the Kafka message shape, minus the broker), drained with
-  * `Trigger.AvailableNow` through the P1–P2 decode path.
+  * `Trigger.AvailableNow` through the P1–P2 decode path into the four
+  * manifest-committed bucket stores, which are read back through
+  * [[graft.sync.ManifestStore.readStore]].
   */
 class StreamingPipelineSpec extends SparkSpec {
 
@@ -27,33 +30,29 @@ class StreamingPipelineSpec extends SparkSpec {
   private lazy val expected =
     Enrichment.enrich(raw, rate, pinnedClock).cache()
 
-  private def runFanOut(): Pipeline.OutputLayout = {
+  private def store(dir: String): DataFrame =
+    ManifestStore.readStore(spark, dir).get
+
+  private def drain(): StreamMain.Status =
+    StreamMain.run(spark, inputDir, s"$root/out",
+      rateFor = _ => rate, clock = pinnedClock)
+
+  private lazy val layout = {
     TransactionParser.toJsonValue(raw).select("value")
       .coalesce(1).write.mode("overwrite").text(inputDir)
-    val layout = Pipeline.OutputLayout(s"$root/fanout")
-    val q = Pipeline.startFanOut(
-      Pipeline.jsonFileSource(spark, inputDir), layout,
-      rate, Trigger.AvailableNow, pinnedClock)
-    q.awaitTermination()
-    layout
+    drain()
+    Pipeline.StoreLayout(s"$root/out")
   }
 
-  private lazy val layout = runFanOut()
-
   test("fan-out streaming run produces the batch pipeline's bucket counts") {
-    val validOut = spark.read.parquet(layout.valid)
-    val fraudOut = spark.read.parquet(layout.fraud)
-    val errorsOut = spark.read.option("header", "true").csv(layout.errors)
-    val invalidOut = spark.read.option("header", "true").csv(layout.invalidLog)
-
-    assert(validOut.count() === Splitter.valid(expected).count())
-    assert(fraudOut.count() === Splitter.fraud(expected).count())
-    assert(errorsOut.count() === Splitter.errors(expected).count())
-    assert(invalidOut.count() === Splitter.invalid(expected).count())
+    assert(store(layout.valid).count() === Splitter.valid(expected).count())
+    assert(store(layout.fraud).count() === Splitter.fraud(expected).count())
+    assert(store(layout.errors).count() === Splitter.errors(expected).count())
+    assert(store(layout.invalidLog).count() === Splitter.invalid(expected).count())
   }
 
   test("streaming valid bucket matches batch values, not just counts") {
-    val got = spark.read.parquet(layout.valid)
+    val got = store(layout.valid)
       .agg(
         sum(col("Amount_USD").cast("decimal(18,2)")).as("usd"),
         countDistinct(col("Card")).as("cards"))
@@ -66,16 +65,18 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("valid sink is partitioned by Year/Month/Day on disk") {
-    val topLevel = new java.io.File(layout.valid).list().toSeq
-    assert(topLevel.exists(_.startsWith("Year=")))
-    val yearDir = new java.io.File(layout.valid,
-      topLevel.find(_.startsWith("Year=")).get)
-    assert(yearDir.list().exists(_.startsWith("Month=")))
+  test("valid store is partitioned by each row's ymd = Year·10⁴ + Month·10² + Day") {
+    val partDirs = new java.io.File(s"${layout.valid}/data").listFiles().toSeq
+      .flatMap(_.list().filterNot(n => n.startsWith("_") || n.startsWith(".")))
+    assert(partDirs.nonEmpty && partDirs.forall(_.startsWith("ymd=")), partDirs)
+    val v = store(layout.valid)
+    assert(v.select("ymd").distinct().count() > 1)
+    assert(v.filter(col("ymd") =!=
+      col("Year") * 10000 + col("Month") * 100 + col("Day")).count() === 0)
   }
 
   test("validation log carries exactly the reference's 5-column layout") {
-    val invalidOut = spark.read.option("header", "true").csv(layout.invalidLog)
+    val invalidOut = store(layout.invalidLog).drop("ymd")
     assert(invalidOut.columns.toSeq === Sinks.validationLogColumns)
     // every logged reason is one of the two reference reasons
     val reasons = invalidOut.select("invalid_reason").distinct()
@@ -83,41 +84,18 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(reasons.subsetOf(Set("Invalid Date", "Data format invalid or missing")))
   }
 
-  test("reference-faithful multi-query mode agrees with the fan-out run") {
-    val layout2 = Pipeline.OutputLayout(s"$root/multiq")
-    val qs = Pipeline.startMultiQuery(
-      Pipeline.jsonFileSource(spark, inputDir), layout2,
-      rate, Trigger.AvailableNow)
-    qs.foreach(_.awaitTermination())
-    assert(spark.read.parquet(layout2.valid).count() ===
-      spark.read.parquet(layout.valid).count())
-    assert(spark.read.option("header", "true").csv(layout2.invalidLog).count() ===
-      spark.read.option("header", "true").csv(layout.invalidLog).count())
-  }
-
-  test("K1 console sink drains an AvailableNow stream") {
-    val q = Sinks.console(
-      Pipeline.jsonFileSource(spark, inputDir).select("Card", "Amount"),
-      s"$root/_checkpoints/console", Trigger.AvailableNow, truncate = true)
-    q.awaitTermination()
-    assert(!q.isActive)
-  }
-
   test("checkpoint recovery: a restarted query processes only new files, no duplicates") {
-    layout // force the first fan-out run
-    val firstCount = spark.read.parquet(layout.valid).count()
+    val firstCount = store(layout.valid).count()
     // drop 2 more raw batches into the SAME input dir
     val extra = raw.limit(40)
     TransactionParser.toJsonValue(extra).select("value")
       .coalesce(1).write.mode("append").text(inputDir)
     // restart with the SAME checkpoint: only the new file may be processed
-    val q = Pipeline.startFanOut(
-      Pipeline.jsonFileSource(spark, inputDir), layout,
-      rate, Trigger.AvailableNow, pinnedClock)
-    q.awaitTermination()
+    val st = drain()
     val expectedExtra = Splitter.valid(
       Enrichment.enrich(extra, rate, pinnedClock)).count()
-    assert(spark.read.parquet(layout.valid).count() === firstCount + expectedExtra)
+    assert(st.newBatches === 1L)
+    assert(store(layout.valid).count() === firstCount + expectedExtra)
   }
 
   test("malformed JSON decodes to all-null rows that drop through every bucket") {
@@ -159,10 +137,10 @@ class StreamingPipelineSpec extends SparkSpec {
       java.time.LocalDate.parse("2024-06-02"))
     var day = days.next()
     val rates = Map("2024-06-01" -> 25000.0, "2024-06-02" -> 26000.0)
-    val layout2 = Pipeline.OutputLayout(s"$root2/out")
+    val layout2 = Pipeline.StoreLayout(s"$root2/out")
 
     def runOnce(): Unit = {
-      val q = Pipeline.startFanOutWithRates(
+      val q = Pipeline.startFanOutCommitted(
         Pipeline.jsonFileSource(spark, in), layout2,
         d => rates(d.toString), Trigger.AvailableNow,
         pinnedClock, today = () => day)
@@ -173,7 +151,7 @@ class StreamingPipelineSpec extends SparkSpec {
     msgs.coalesce(1).write.mode("append").text(in) // next day's traffic
     runOnce() // day 2 — checkpoint skips day 1's files
 
-    val out = spark.read.parquet(layout2.valid)
+    val out = store(layout2.valid)
       .select(col("Exchange_Rate")).distinct()
       .collect().map(_.getInt(0)).toSet
     assert(out === Set(25000, 26000))

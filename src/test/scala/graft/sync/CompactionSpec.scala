@@ -1,55 +1,12 @@
 package graft.sync
 
 import graft.SparkSpec
-import graft.tx.{Enrichment, RawTransactions, Splitter}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Compaction must shrink a day's file count to the target without
-  * changing a single row, and leave other partitions untouched. */
+/** purgeKeys must delete exactly the keyed rows, rewrite only the
+  * partitions that held them, and leave every other partition alone. */
 class CompactionSpec extends SparkSpec {
-
-  private def partFiles(dir: String, y: Int, m: Int, d: Int): Int = {
-    val p = new java.io.File(s"$dir/Year=$y/Month=$m/Day=$d")
-    if (!p.exists()) 0 else p.list().count(_.startsWith("part-"))
-  }
-
-  test("compacting a day merges its files, preserves rows, leaves other days alone") {
-    val root = Files.createTempDirectory("graft-compact").toString
-    val validDir = s"$root/valid"
-    val valid = Splitter.valid(Enrichment.enrich(
-      RawTransactions.fromEvents(spark, sf), Enrichment.DefaultRate,
-      to_timestamp(lit("2024-06-01 00:00:00")))).cache()
-    // simulate the streaming sink's fragmentation: 6 appends of 1 file each
-    (1 to 6).foreach { _ =>
-      valid.coalesce(1).write.mode("append")
-        .partitionBy("Year", "Month", "Day").parquet(validDir)
-    }
-    val days = spark.read.parquet(validDir)
-      .select("Year", "Month", "Day").distinct()
-      .orderBy("Year", "Month", "Day").collect()
-    val (y, m, d) = (days(0).getInt(0), days(0).getInt(1), days(0).getInt(2))
-    val (y2, m2, d2) = (days(1).getInt(0), days(1).getInt(1), days(1).getInt(2))
-
-    def checksum(df: DataFrame): Long = df
-      .select(xxhash64(df.columns.sorted.map(col): _*).as("h"))
-      .agg(expr("bit_xor(h)")).collect()(0).getLong(0)
-    val dayFilter = col("Year") === y && col("Month") === m && col("Day") === d
-    val before = spark.read.parquet(validDir).filter(dayFilter)
-    val (rowsBefore, sumBefore) = (before.count(), checksum(before))
-    val otherBefore = partFiles(validDir, y2, m2, d2)
-    assert(partFiles(validDir, y, m, d) === 6)
-
-    val n = Compaction.compactDay(spark, validDir, y, m, d, targetFiles = 1)
-
-    assert(n === rowsBefore)
-    assert(partFiles(validDir, y, m, d) === 1)
-    assert(partFiles(validDir, y2, m2, d2) === otherBefore) // untouched
-    val after = spark.read.parquet(validDir).filter(dayFilter)
-    assert(after.count() === rowsBefore)
-    assert(checksum(after) === sumBefore)
-  }
 
   /** Controlled 3-day store: card "c1" lives only in day 1, "c2" spans
     * days 1–2, "c3" is the SOLE occupant of day 3, "c0" pads every day. */
